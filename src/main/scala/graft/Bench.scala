@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR (default sf0.1) and prints ONE JSON line.
@@ -16,91 +15,28 @@ import org.apache.spark.sql.SparkSession
   * as -1 with its error, never as a fake elapsed time.
   *
   * `"shuffle"` records per-query shuffle-WRITE bytes (average over the
-  * timed runs, from task metrics via a listener): a plan regression that
-  * adds an exchange is visible as a bytes jump even when wall-time at
-  * sf0.1 hides it — the number that actually predicts 100 TB behavior.
+  * timed runs, from task metrics via [[HarnessUtil.QueryTimer]]'s
+  * listener): a plan regression that adds an exchange is visible as a
+  * bytes jump even when wall-time at sf0.1 hides it — the number that
+  * actually predicts 100 TB behavior.
   * Listener delivery is async, so the counter is read only after the
   * listener bus reports empty (`HarnessUtil.drainListeners`); values
   * are per-run averages, not exact-to-the-byte.
   */
 object Bench {
-  private val TimedRuns = 3
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Scan-split floor (guide §6): openCostInBytes models per-file
-      // open/seek overhead when packing files into splits; the 4 MB
-      // default (HDFS-era) also acts as a FLOOR on split size
-      // (maxSplitBytes = max(openCost, totalBytes/defaultParallelism)),
-      // which pins every sub-4MB-per-core table — the whole sf0.1
-      // fixture set — to a near-serial scan front regardless of row
-      // groups. 16 KB is the honest local-NVMe/page-cache open cost and
-      // lets minPartitionNum (defaults to defaultParallelism) size the
-      // splits, so scan parallelism tracks SPARK_GRAFT_CPUS at every
-      // core count. Scale posture: at warehouse scale files are
-      // 128 MB–1 GB, where bytesPerCore >> openCost and this value is
-      // inert; it only matters exactly where the default mis-serializes
-      // small-file scans.
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", (64 * 1024).toString))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_MATERIALIZE_MODE=reliable re-times the whole surface
-    // with every pin checkpointing to storage — the full-surface
-    // overhead measurement for the fault-tolerant posture (same hook
-    // as Verify; see Prims.materialize).
-    sys.env.get("SPARK_GRAFT_MATERIALIZE_MODE").foreach { mode =>
-      spark.conf.set(graft.ops.Prims.MaterializeModeKey, mode)
-      if (mode == "reliable")
-        spark.sparkContext.setCheckpointDir(
-          sys.env.getOrElse("SPARK_GRAFT_CHECKPOINT_DIR", "/tmp/graft_reliable_ckpt"))
-    }
-    HarnessUtil.applyEnvConf(spark) // e.g. layout confs for an arm-wide run
-
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        Option(te.taskMetrics)
-          .foreach(m => { shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten); () })
-    })
-    def drainedShuffleBytes(): Long = {
-      HarnessUtil.drainListeners(spark) // waitUntilEmpty, not a fixed sleep
-      shuffleBytes.get()
-    }
-
-    def q(s: String): String = HarnessUtil.jsonQ(s)
-
-    // one warm-up run (not recorded) + TimedRuns timed samples, sorted;
+    val spark = GraftSession()
     // the SAME protocol everywhere a query is timed — main fleet and
     // both sides of the layout A/B — so recorded numbers are comparable
-    def timeQuery(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (IndexedSeq[Double], Long) = {
-      fn(spark, sfDir).count() // warm-up (not recorded)
-      HarnessUtil.releaseAll(spark, gc = true) // cache entries AND
-                                    // checkpoint blocks must not leak
-                                    // across queries (memory pressure
-                                    // skews later timings)
-      val sb0 = drainedShuffleBytes()
-      val samples = (1 to TimedRuns).map { _ =>
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        HarnessUtil.releaseAll(spark, gc = true)
-        dt
-      }.sorted
-      (samples, (drainedShuffleBytes() - sb0) / TimedRuns)
-    }
+    val timer = new HarnessUtil.QueryTimer(spark)
+
+    def q(s: String): String = HarnessUtil.jsonQ(s)
 
     val errors = scala.collection.mutable.Map[String, String]()
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       try {
-        val (samples, perRunShuffle) = timeQuery(fn)
+        val (samples, perRunShuffle) = timer.time(fn, sfDir)
         (name, samples, perRunShuffle)
       } catch {
         case e: Throwable =>
@@ -125,7 +61,7 @@ object Bench {
     // LAYOUT arm: the families with a serve-side layout, re-benched as a
     // SELF-CONTAINED A/B — each query is timed raw then laid-out
     // BACK-TO-BACK in the same JVM era (same warm-up protocol on both
-    // sides via timeQuery). The r14 record showed why interleaving is
+    // sides via the timer). The r14 record showed why interleaving is
     // not optional: comparing the layout arm (timed at the END of a
     // 139-query run) against raw numbers recorded mid-fleet charged
     // era effects (heap/GC baseline, catalog first-touch) to the layout
@@ -150,7 +86,7 @@ object Bench {
               val fn = SparkEntry.queries(name)
               def arm(on: Boolean) = {
                 setArm(on)
-                try timeQuery(fn) finally setArm(false)
+                try timer.time(fn, sfDir) finally setArm(false)
               }
               if (i % 2 == 0) {
                 val (rs, rsb) = arm(on = false); val (ls, lsb) = arm(on = true)
@@ -222,8 +158,8 @@ object Bench {
         spark.conf.unset(graft.storage.Layout.DocsServingDirKey)
       }
 
-    // STAGE-ATTRIBUTED curate_manifest: the same mark-callback breakdown
-    // graft.CurateStages prints, recorded INTO the bench line — when the
+    // STAGE-ATTRIBUTED curate_manifest: the construction-mark breakdown
+    // of PipelineOps.curateStages, recorded INTO the bench line — when the
     // fleet's most checkpoint-heavy query shows a wall anomaly, the
     // record itself says which eager stage (tokenize checkpoint, cluster
     // resolution, Bloom build, quota rank, pack) absorbed the time,
@@ -250,10 +186,10 @@ object Bench {
           marks.toSeq
         }
         sample() // warm-up (not recorded)
-        val runs = (1 to TimedRuns).map(_ => sample())
+        val runs = (1 to HarnessUtil.TimedRuns).map(_ => sample())
         val labels = runs.head.map(_._1)
         val obj = labels.zipWithIndex.map { case (label, i) =>
-          q(label) + ":" + runs.map(_(i)._2).sorted.apply(TimedRuns / 2)
+          q(label) + ":" + runs.map(_(i)._2).sorted.apply(HarnessUtil.TimedRuns / 2)
         }.mkString("{", ",", "}")
         s""","curate_stages":$obj"""
       } catch { case scala.util.control.NonFatal(e) =>

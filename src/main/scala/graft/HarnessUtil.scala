@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Shared plumbing for the harness mains (Verify / Bench / Scratch /
-  * ScaleProbe) — one JSON escaper and one between-queries release, so the
-  * three mains can never drift apart. */
+/** Shared plumbing for the harness mains (Verify / Bench / ScaleProbe)
+  * — one JSON escaper, one between-queries release and one timing
+  * protocol, so the mains can never drift apart. */
 private[graft] object HarnessUtil {
 
   /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -51,7 +51,7 @@ private[graft] object HarnessUtil {
   }
 
   /** Drain the async listener bus so metrics accumulated by a
-    * SparkListener (per-query shuffle-byte deltas in Bench/Scratch) are
+    * SparkListener (per-query shuffle-byte deltas in [[QueryTimer]]) are
     * fully delivered before the counter is read — a fixed sleep lags
     * behind the bus under load and bleeds one query's task metrics into
     * the next query's delta. A bus that cannot drain within 10 s is
@@ -60,21 +60,6 @@ private[graft] object HarnessUtil {
   def drainListeners(spark: SparkSession): Unit =
     try org.apache.spark.GraftSparkShim.waitListenerBusEmpty(spark.sparkContext, 10000L)
     catch { case _: java.util.concurrent.TimeoutException => () }
-
-  /** Apply `SPARK_GRAFT_CONF="k=v;k=v"` to the session — the generic
-    * knob for running a harness main under non-default session confs.
-    * The motivating use: Verify over the SERVING LAYOUTS
-    * (`SPARK_GRAFT_CONF="spark.graft.layout.enabled=true;..."`) proves
-    * on the FULL oracle surface that no layout changes a result — the
-    * per-query LayoutSpec identity checks, promoted to all of
-    * SparkEntry. */
-  def applyEnvConf(spark: SparkSession): Unit =
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.trim.nonEmpty => spark.conf.set(k.trim, v.trim)
-        case _ => ()
-      }
-    })
 
   /** Free everything a finished query pinned: catalog cache entries,
     * localCheckpoint blocks, AND tracked data-sized broadcasts.
@@ -98,5 +83,46 @@ private[graft] object HarnessUtil {
     // whichever query happens to run next. Sustained cross-query heap
     // pressure inflated four recorded bench lines up to 6.6x in round 5.
     if (gc) System.gc()
+  }
+
+  /** Timed samples per query, after one untimed warm-up run. */
+  val TimedRuns = 3
+
+  /** The timing protocol shared by Bench and `ScaleProbe time`: one
+    * warm-up run (JIT + session/codegen warm-up, not recorded), then
+    * [[TimedRuns]] timed `count()`s, each followed by
+    * `releaseAll(gc = true)` so cache entries, checkpoint blocks and
+    * one query's garbage never leak into the next sample. Shuffle-write
+    * bytes come from ONE task-end listener registered at construction
+    * and are read only after the listener bus drains, so they are
+    * per-run averages, not exact to the byte. */
+  final class QueryTimer(spark: SparkSession) {
+    private val shuffleBytes = new java.util.concurrent.atomic.AtomicLong()
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(te.taskMetrics)
+          .foreach(m => { shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten); () })
+    })
+
+    private def drainedShuffleBytes(): Long = {
+      drainListeners(spark)
+      shuffleBytes.get()
+    }
+
+    /** (sorted samples in seconds, average shuffle-write bytes per run). */
+    def time(fn: (SparkSession, String) => DataFrame, dir: String)
+        : (IndexedSeq[Double], Long) = {
+      fn(spark, dir).count()
+      releaseAll(spark, gc = true)
+      val sb0 = drainedShuffleBytes()
+      val samples = (1 to TimedRuns).map { _ =>
+        val t0 = System.nanoTime()
+        fn(spark, dir).count()
+        val dt = (System.nanoTime() - t0) / 1e9
+        releaseAll(spark, gc = true)
+        dt
+      }.sorted
+      (samples, (drainedShuffleBytes() - sb0) / TimedRuns)
+    }
   }
 }

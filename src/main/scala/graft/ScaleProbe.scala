@@ -2,1774 +2,115 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.Prims.MaterializeOps
 
-/** Empirical scale-up probe: replicate the sf0.1 testdata 10× (with
-  * shifted keys, into /tmp) and compare operator runtimes against the
-  * sf0.1 numbers — the "would this survive 10×?" check the 100 TB
-  * contract asks for. Near-linear growth (≈10×) means the plan has no
-  * super-linear term; anything quadratic shows up immediately. */
+/** Scale probes: generate an N× copy of a testdata dir, time queries
+  * across dirs, print plans. Three subcommands:
+  *
+  *  - `gen <outDir> <mult> <verbatimEighths>` — [[gen]] over the
+  *    testdata dir named by `SPARK_GRAFT_SF_DIR`.
+  *  - `time <dir>... -- <query>...` — each query on each dir with
+  *    Bench's protocol ([[HarnessUtil.QueryTimer]]): median seconds and
+  *    shuffle-write MB per dir, and both as a ratio to the first dir.
+  *  - `plan <dir> [query...]` — formatted physical plans, so the
+  *    scale-sanity checks (pushdown, pruning, broadcast, partial agg,
+  *    codegen spans) are auditable after any operator change.
+  *
+  * The one-off probes of earlier rounds (grouped rank, IVF training,
+  * chain diameter, skew, layouts, seal costs, …) are written up in
+  * docs/SCALEPROBE_r*.md and docs/SCALING.md; their code is in commit
+  * 5af66b2. */
 object ScaleProbe {
 
-  /** `density` mode: pin the dedup tail's "work ∝ collisions" claim on a
-    * hostile distribution. Three corpora at IDENTICAL volume (10× docs)
-    * whose only difference is the near-dup density: a doc_id-hash share
-    * (1/8, 2/8, 4/8) of documents keeps all 10 copies content-identical
-    * (a dup group → C(10,2)=45 true pairs each); every other copy has
-    * each token salted with its copy index, which changes every shingle
-    * so it collides with nothing. Volume constant + density doubling ⇒
-    * if candidate work is bucket-local, wall-time follows PAIR COUNT,
-    * not volume². A quadratic all-pairs term would show as time growing
-    * faster than the pair count between corpora. */
-  private def densityProbe(spark: SparkSession, src: String, queries: Seq[String]): Unit = {
-    val mult = 10
-    val shares = Seq(1, 2, 4) // of 8: 12.5% / 25% / 50% dup-group docs
-    def corpusDir(m: Int) = s"/tmp/graft_density_$m"
-    shares.foreach { m =>
-      val dir = corpusDir(m)
-      if (!new java.io.File(s"$dir/documents.parquet").exists()) {
-        val base = spark.read.parquet(s"$src/documents.parquet")
-        val copies = spark.range(mult).select(col("id").as("copy"))
-        base.crossJoin(copies)
-          .withColumn("text",
-            when(col("copy") === 0 || pmod(col("doc_id"), lit(8)) < m, col("text"))
-              .otherwise(concat_ws(" ",
-                expr("transform(split(text, ' '), w -> concat(w, '_', copy))"))))
-          .withColumn("doc_id", col("doc_id") + col("copy") * 1000000L)
-          .drop("copy")
-          .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      }
-    }
-    println(f"${"query"}%-20s ${"share"}%6s ${"pairs"}%10s ${"sec"}%8s ${"sec/Kpair"}%10s")
-    queries.foreach { n =>
-      val fn = SparkEntry.queries(n)
-      shares.foreach { m =>
-        val dir = corpusDir(m)
-        fn(spark, dir).count() // warm
-        HarnessUtil.releaseAll(spark)
-        val t0 = System.nanoTime()
-        val pairs = fn(spark, dir).count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        HarnessUtil.releaseAll(spark)
-        println(f"$n%-20s ${s"$m/8"}%6s $pairs%10d $sec%8.2f ${sec * 1000 / math.max(pairs, 1)}%10.3f")
-      }
-    }
-  }
+  private val PlanQueries = Seq("filter", "group_agg", "enrich_wide_row", "window_join",
+    "dedup_near_minhash", "ann_topk", "ann_ivf_topk", "word_count",
+    "session_window", "ngram_jaccard", "pipeline_clean",
+    "decontaminate", "domain_mix", "corpus_shuffle", "repetition_score")
 
-  /** `fresh10x` mode: the constant-density 10× probe that settles the
-    * pair-family attribution (docs/SCALING.md). The standard 10× replica
-    * copies documents VERBATIM, so every duplicate family gains 10
-    * replicas and its within-family pair count grows ~quadratically —
-    * the 5–25× wall ratios the pair queries record there are that
-    * replica artifact, not plan behavior. Here every copy except the
-    * first gets copy-salted tokens (fresh text: collides with nothing
-    * across copies), holding duplication DENSITY constant while volume
-    * grows 10× — under which a pair-family query whose work is
-    * candidate-proportional must track ~linear. A super-linear ratio
-    * HERE would be a real scale defect. */
-  private def fresh10xProbe(spark: SparkSession, src: String, queries: Seq[String],
-      mult: Int = 10): Unit = {
-    val dir = s"/tmp/graft_fresh${mult}x"
-    if (!new java.io.File(s"$dir/documents.parquet").exists()) {
-      val base = spark.read.parquet(s"$src/documents.parquet")
-      val copies = spark.range(mult).select(col("id").as("copy"))
-      base.crossJoin(copies)
-        .withColumn("text",
-          when(col("copy") === 0, col("text"))
-            .otherwise(concat_ws(" ",
-              expr("transform(split(text, ' '), w -> concat(w, '_', copy))"))))
-        .withColumn("doc_id", col("doc_id") + col("copy") * 1000000L)
-        .drop("copy")
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    }
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        Option(te.taskMetrics)
-          .foreach(m => { shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten); () })
-    })
-    println(f"${"query"}%-24s ${"sf0.1"}%8s ${s"fresh${mult}x"}%9s ${"ratio"}%6s ${"shufMB1x"}%9s ${s"shufMB${mult}x"}%10s ${"shufRatio"}%9s")
-    queries.foreach { n =>
-      val fn = SparkEntry.queries(n)
-      def timed(d: String): (Double, Double) = {
-        fn(spark, d).count() // warm
-        HarnessUtil.releaseAll(spark, gc = true)
-        HarnessUtil.drainListeners(spark)
-        val sb0 = shuffleBytes.get()
-        val t0 = System.nanoTime()
-        fn(spark, d).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        HarnessUtil.releaseAll(spark, gc = true)
-        HarnessUtil.drainListeners(spark)
-        (dt, (shuffleBytes.get() - sb0) / 1024.0 / 1024.0)
-      }
-      val ((b, bmb), (f, fmb)) = (timed(src), timed(dir))
-      println(f"$n%-24s $b%8.2f $f%9.2f ${f / b}%6.1f $bmb%9.1f $fmb%10.1f ${fmb / math.max(bmb, 0.001)}%9.1f")
-    }
-  }
-
-  /** `materialize` mode: the overhead of reliable (fault-tolerant)
-    * materialization vs the local default, on materialize-heavy queries
-    * at sf0.1 — the number that prices Prims.materialize's
-    * `reliable` posture for long 100 TB runs (local blocks die with
-    * their executor; reliable checkpoints survive node loss). */
-  private def materializeProbe(spark: SparkSession, src: String, queries: Seq[String]): Unit = {
-    val ckpt = "/tmp/graft_reliable_ckpt_probe"
-    spark.sparkContext.setCheckpointDir(ckpt)
-    println(f"${"query"}%-24s ${"local"}%8s ${"reliable"}%9s ${"overhead"}%9s")
-    queries.foreach { n =>
-      val fn = SparkEntry.queries(n)
-      def timed(mode: String): Double = {
-        spark.conf.set(graft.ops.Prims.MaterializeModeKey, mode)
-        try {
-          fn(spark, src).count() // warm
-          HarnessUtil.releaseAll(spark, gc = true)
-          val t0 = System.nanoTime()
-          fn(spark, src).count()
-          val dt = (System.nanoTime() - t0) / 1e9
-          HarnessUtil.releaseAll(spark, gc = true)
-          dt
-        } finally spark.conf.unset(graft.ops.Prims.MaterializeModeKey)
-      }
-      val (l, r) = (timed("local"), timed("reliable"))
-      println(f"$n%-24s $l%8.2f $r%9.2f ${(r / l - 1) * 100}%8.1f%%")
-    }
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-  }
-
-  /** `grouprank` mode: pin the grouped-rank skew claim with a frame big
-    * enough that the single-task sort actually shows. One dominant group
-    * (90% of rows) + 4 small ones, at 1M and 10M rows: the window form
-    * (`row_number() OVER (PARTITION BY g ORDER BY ...)`) sorts the
-    * dominant group in ONE task, so its time grows with the group; the
-    * two-phase `Prims.groupedRowNumber` spreads the same order across
-    * the range exchange. Both are timed on identical checkpointed
-    * inputs; equality of results is PrimsSpec's job. */
-  private def groupRankProbe(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.expressions.Window
-    for (n <- Seq(1000000L, 10000000L)) {
-      // plain lineage, not checkpointed: releaseAll between runs frees
-      // checkpoint blocks, and a range projection regenerates for free —
-      // both arms pay the identical narrow generation cost
-      val df = spark.range(n).select(
-          when(col("id") % 10 === 0, concat(lit("s"), col("id") % 4))
-            .otherwise(lit("big")).as("g"),
-          (col("id") * 7919 % 104729).as("v"), col("id"))
-        .repartition(32)
-      def time(label: String)(mk: => DataFrame): Unit = {
-        mk.count() // warm
-        HarnessUtil.releaseAll(spark)
-        val t0 = System.nanoTime()
-        mk.count()
-        HarnessUtil.releaseAll(spark)
-        println(f"grouprank n=$n%-9d $label%-10s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      }
-      time("window") {
-        df.withColumn("rk", row_number().over(
-          Window.partitionBy("g").orderBy("v", "id")).cast("long"))
-      }
-      time("two-phase") {
-        graft.ops.Prims.groupedRowNumber(df, "rk", Seq("g"), col("v"), col("id"))
-      }
-      // the scale-limiting quantity: the most rows any ONE task must
-      // sort. The window form clusters by group (its exchange is
-      // hash-by-g), so its max task carries the dominant group; the
-      // two-phase range exchange spreads the same order evenly. Wall
-      // time above is constant-factor territory at probe scale — THIS
-      // number is what turns into the spill/OOM/straggler at 100x.
-      def maxTaskRows(exchanged: DataFrame): Long =
-        exchanged.groupBy(spark_partition_id().as("p")).count()
-          .agg(max("count")).collect()(0).getLong(0)
-      val winMax = maxTaskRows(df.repartition(col("g")))
-      val tpMax = maxTaskRows(df.repartitionByRange(col("g"), col("v"), col("id")))
-      println(f"grouprank n=$n%-9d max-task-rows: window=$winMax%,d two-phase=$tpMax%,d")
-      HarnessUtil.releaseAll(spark)
-    }
-  }
-
-  /** `ivftrain` mode: pin the sampled-training claim — Lloyd training on
-    * the fixed-size [[graft.ops.Similarity.trainSample]] must cost the
-    * same at 1× and 10× corpus, while full-corpus training grows. Calls
-    * the trainer directly (the memoized query path hides training from a
-    * second run). */
-  private def ivfTrainProbe(spark: SparkSession, src: String, big: String): Unit = {
-    import graft.ops.Similarity
-    def embOf(dir: String) = spark.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id"), expr(Similarity.quantExpr).as("qv"))
-    for ((label, dir) <- Seq("sf0.1" -> src, "10x" -> big)) {
-      val emb = embOf(dir).materialized
-      def time(kind: String)(train: => Unit): Unit = {
-        train // warm (JIT; training itself is uncached)
-        val t0 = System.nanoTime()
-        train
-        println(f"ivftrain $label%-6s $kind%-8s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      }
-      time("full")    { Similarity.trainedCentroids(spark, emb); () }
-      time("sampled") { Similarity.trainedCentroids(spark, Similarity.trainSample(emb)); () }
-      HarnessUtil.releaseAll(spark)
-    }
-  }
-
-  /** `semantic` mode: the round-8 gap — probe the semantic family
-    * (`semantic_dedup`, `semantic_incremental`, `embed_cluster_profile`)
-    * at 10× volume on the honest replica, then on a HOSTILE distribution
-    * (every embedding IDENTICAL, so k-means seeds coincide, the
-    * (d2, cent_id) tie-break sends every vector to cluster 0, and the
-    * one cluster holds the whole corpus at cosine 1.0): the hot-cluster
-    * hub-star guard must hold — wall time follows VOLUME (≈10× at 10×),
-    * never occupancy² — and the probe ASSERTS the distribution really is
-    * one total cluster and that the collapse kept exactly the hub. */
-  private def semanticProbe(spark: SparkSession, src: String, big: String): Unit = {
-    val qs = Seq("semantic_dedup", "semantic_incremental", "embed_cluster_profile")
-    def time1(n: String, dir: String): (Double, Long) = {
-      val fn = SparkEntry.queries(n)
-      fn(spark, dir).count() // warm (includes one-off memoized codebook training)
-      HarnessUtil.releaseAll(spark)
-      val t0 = System.nanoTime()
-      val rows = fn(spark, dir).count()
-      HarnessUtil.releaseAll(spark)
-      ((System.nanoTime() - t0) / 1e9, rows)
-    }
-    println(f"${"query"}%-24s ${"sf0.1"}%8s ${"10x"}%8s ${"ratio"}%6s")
-    qs.foreach { n =>
-      val (a, _) = time1(n, src)
-      val (b, _) = time1(n, big)
-      println(f"$n%-24s $a%8.2f $b%8.2f ${b / a}%6.1f")
-    }
-    // hostile corpora: identical embeddings, 1x and 10x volume
-    for (mult <- Seq(1, 10)) {
-      val dir = s"/tmp/graft_sem_hostile_$mult"
-      if (!new java.io.File(s"$dir/embeddings.parquet").exists()) {
-        val base = spark.read.parquet(s"$src/embeddings.parquet")
-        val copies = spark.range(mult).select(col("id").as("copy"))
-        base.crossJoin(copies)
-          .withColumn("vec_id", col("vec_id") + col("copy") * 1000000L)
-          .withColumn("embedding",
-            expr("transform(sequence(1, 64), i -> CAST(1.0 AS FLOAT))"))
-          .drop("copy")
-          .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      }
-    }
-    val hostile = Seq(1, 10).map { mult =>
-      val dir = s"/tmp/graft_sem_hostile_$mult"
-      val n = spark.read.parquet(s"$dir/embeddings.parquet").count()
-      // assert BOTH premises from ONE pipeline execution (occupancy: one
-      // cluster holds everything; collapse: only the hub survives —
-      // everything else is a cosine-1.0 duplicate reached via the star)
-      val prof = graft.ops.Similarity.semanticDedup(spark, dir)
-        .groupBy("cluster_id")
-        .agg(count(lit(1)).as("cn"),
-          sum(when(col("kept"), 1L).otherwise(0L)).as("k"))
-        .agg(max("cn"), sum("k")).head()
-      val (occ, kept) = (prof.getLong(0), prof.getLong(1))
-      require(occ == n, s"hostile corpus not one-cluster: max occupancy $occ of $n")
-      require(kept == 1, s"hostile collapse kept $kept vectors, expected the hub only")
-      HarnessUtil.releaseAll(spark)
-      val (sec, _) = time1("semantic_dedup", dir)
-      println(f"semantic_dedup hostile ${mult}x: n=$n%,d one-cluster occ=$occ%,d " +
-        f"kept=$kept sec=$sec%.2f")
-      sec
-    }
-    println(f"hostile wall ratio (10x/1x, hub-star bound says ~linear): " +
-      f"${hostile(1) / hostile(0)}%.1f")
-  }
-
-  /** `simwidth` mode: probe `simhash_hamming_pairs` at PRODUCTION width
-    * — 64-bit fingerprint, 4 bands × 16 bits (Manku et al.'s
-    * configuration), previously only documented. The fixture width
-    * (16-bit fp, 4-bit bands) has only 16 possible band values, so
-    * buckets are corpus-fraction-sized and the hub-star cap does the
-    * heavy lifting; at 64/16 the 65,536 band values must spread real
-    * corpora into genuinely sparse buckets. Reports, at sf0.1 and 10×:
-    * bucket count, max bucket size, hot buckets (over the cap),
-    * candidate pairs vs confirmed pairs (precision), and wall. */
-  private def simWidthProbe(spark: SparkSession, src: String, big: String): Unit = {
-    import graft.ops.Dedup
-    val (bits, k) = (64, 3)
-    val (nBands, bandBits) = (k + 1, 64 / (k + 1))
-    println(f"${"corpus"}%-7s ${"docs"}%9s ${"buckets"}%9s ${"maxbkt"}%7s " +
-      f"${"hot"}%5s ${"cands"}%10s ${"pairs"}%8s ${"prec"}%6s ${"sec"}%7s")
-    for ((label, dir) <- Seq("sf0.1" -> src, "10x" -> big)) {
-      val fps = Dedup.simhashFpsImpl(spark, dir, bits).materialized
-      val n = fps.count()
-      val bands = (0 until nBands).map(b => fps.select(
-          lit(b).as("band"),
-          shiftrightunsigned(col("simhash"), bandBits * b)
-            .bitwiseAND(lit((1L << bandBits) - 1)).as("bval")))
-        .reduce(_ unionByName _)
-      val bs = bands.groupBy("band", "bval").agg(count(lit(1)).as("bn"))
-        .materialized
-      val row = bs.agg(
-        count(lit(1)).as("buckets"), max("bn").as("maxbkt"),
-        sum(when(col("bn") > 100, 1L).otherwise(0L)).as("hot"),
-        // candidate pairs the banding emits: all-pairs below the cap,
-        // hub-star (bn-1) above it — the exact generator contract
-        sum(when(col("bn") <= 100, expr("bn * (bn - 1) DIV 2"))
-          .otherwise(col("bn") - 1)).as("cands")).head()
-      graft.HarnessUtil.releaseAll(spark)
-      val t0 = System.nanoTime()
-      val pairs = Dedup.simhashHammingPairsImpl(spark, dir, bits, k).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      graft.HarnessUtil.releaseAll(spark)
-      val cands = row.getLong(3)
-      println(f"$label%-7s $n%9d ${row.getLong(0)}%9d ${row.getLong(1)}%7d " +
-        f"${row.getLong(2)}%5d $cands%10d $pairs%8d " +
-        f"${pairs.toDouble / math.max(cands, 1)}%6.3f $sec%7.2f")
-    }
-  }
-
-  /** `artifact` mode: measure the recompute the materialized pair-graph
-    * artifact ([[graft.ops.Dedup.pairGraph]]) saves. The self-contained
-    * cluster-family queries each pay shingle-index + pair-join (+
-    * cluster resolution) per run — the honest price of the harness's
-    * no-memoization contract, and the fleet's single largest avoidable
-    * cost. The artifact pays it ONCE at write time; readers then join
-    * the parquet. Timed with the house warm+release protocol on the
-    * query arms; the write arm is timed cold (a write-once job has no
-    * warm steady state — its cost IS the one-time compute). */
-  private def artifactProbe(spark: SparkSession, src: String): Unit = {
-    import graft.ops.Dedup
-    def timed(label: String)(mk: => Long): Double = {
-      mk // warm
-      HarnessUtil.releaseAll(spark)
-      val t0 = System.nanoTime()
-      val rows = mk
-      val sec = (System.nanoTime() - t0) / 1e9
-      HarnessUtil.releaseAll(spark)
-      println(f"artifact $label%-26s $sec%7.2f s  rows=$rows%,d")
-      sec
-    }
-    val selfTotal = Seq("dedup_clusters", "dedup_survivors", "ngram_jaccard").map { n =>
-      timed(s"self $n")(SparkEntry.queries(n)(spark, src).count())
-    }.sum
-    val art = "/tmp/graft_pairgraph_art"
-    val t0 = System.nanoTime()
-    Dedup.pairGraph(spark, src, art)
-    val writeSec = (System.nanoTime() - t0) / 1e9
-    HarnessUtil.releaseAll(spark)
-    println(f"artifact ${"pairGraph write (once)"}%-26s $writeSec%7.2f s")
-    val readTotal =
-      timed("read clusters")(Dedup.clustersFromArtifact(spark, art).count()) +
-      timed("read survivors")(Dedup.survivorsFromArtifact(spark, src, art).count()) +
-      timed("read jaccard")(Dedup.jaccardFromArtifact(spark, art).count())
-    println(f"artifact summary: self-contained 3 queries $selfTotal%.2f s vs " +
-      f"write-once $writeSec%.2f s + 3 reads $readTotal%.2f s " +
-      f"(reads alone ${selfTotal / math.max(readTotal, 0.01)}%.1fx faster; " +
-      "each ADDITIONAL consumer of the graph rides the read price)")
-  }
-
-  /** `sketchreuse` mode: price the feed loop's persisted dedup sketch
-    * ([[graft.ops.Dedup.sketchOf]]) against re-sketching the corpus per
-    * nightly batch. Corpus = the 10× fresh-text replica (every copy's
-    * shingles distinct — the honest volume), batch = one sf0.1-sized
-    * slice (a nightly ingest's shape, ~1/10 of the corpus). Arms:
-    * `resketch` is [[graft.ops.Dedup.incrementalDispositions]] over raw
-    * text (re-minhashes the corpus inside every call — what a
-    * deployment must NOT do); `build (once)` writes the persisted
-    * sketch artifact; `reuse` dispositions the same batch against the
-    * artifact read back from parquet — the recurring nightly price. At
-    * 100 TB the corpus:batch ratio is far beyond 10:1, so the measured
-    * reuse-vs-resketch ratio is a LOWER bound on the win. */
-  private def sketchReuseProbe(spark: SparkSession, src: String): Unit = {
-    import graft.ops.Dedup
-    val dir = "/tmp/graft_fresh10x"
-    if (!new java.io.File(s"$dir/documents.parquet").exists()) {
-      val base = spark.read.parquet(s"$src/documents.parquet")
-      val copies = spark.range(10).select(col("id").as("copy"))
-      base.crossJoin(copies)
-        .withColumn("text",
-          when(col("copy") === 0, col("text"))
-            .otherwise(concat_ws(" ",
-              expr("transform(split(text, ' '), w -> concat(w, '_', copy))"))))
-        .withColumn("doc_id", col("doc_id") + col("copy") * 1000000L)
-        .drop("copy")
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    }
-    val corpus = spark.read.parquet(s"$dir/documents.parquet")
-    val batch = spark.read.parquet(s"$src/documents.parquet")
-    println(f"sketchreuse corpus=${corpus.count()}%,d docs  batch=${batch.count()}%,d docs")
-    def timed(label: String)(mk: => Long): Double = {
-      mk // warm
-      HarnessUtil.releaseAll(spark, gc = true)
-      val t0 = System.nanoTime()
-      val rows = mk
-      val sec = (System.nanoTime() - t0) / 1e9
-      HarnessUtil.releaseAll(spark, gc = true)
-      println(f"sketchreuse $label%-24s $sec%7.2f s  rows=$rows%,d")
-      sec
-    }
-    val resketch = timed("resketch per batch")(
-      Dedup.incrementalDispositions(corpus, batch).count())
-    val art = "/tmp/graft_sketch_art"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(art))
-    val t0 = System.nanoTime()
-    Dedup.sketchOf(corpus).write.parquet(art)
-    val buildSec = (System.nanoTime() - t0) / 1e9
-    HarnessUtil.releaseAll(spark, gc = true)
-    println(f"sketchreuse ${"sketch build (once)"}%-24s $buildSec%7.2f s")
-    val reuse = timed("reuse per batch")(
-      Dedup.sketchedDispositions(
-        spark.read.parquet(art), Dedup.sketchOf(batch)).count())
-    println(f"sketchreuse summary: persisted-sketch batch $reuse%.2f s vs " +
-      f"re-sketch batch $resketch%.2f s (${resketch / math.max(reuse, 0.01)}%.1fx; " +
-      f"one-time build $buildSec%.2f s pays for itself after " +
-      f"${math.ceil(buildSec / math.max(resketch - reuse, 0.01)).toLong} batches — " +
-      "and the feed maintains the artifact per-day, never rebuilding it)")
-  }
-
-  /** `chain` mode: pin [[graft.ops.Dedup.alternatingStar]]'s O(log n)
-    * round bound on the topology that killed the old algorithm — a
-    * single chain-shaped component whose diameter equals its node
-    * count. Min-label propagation needs DIAMETER rounds here (a 1M-node
-    * chain = 1M rounds, each re-joining the full edge set; the old
-    * 20-round guard fired at depth 21). Alternating-star must converge
-    * in ~log₂(n) rounds: the probe runs chains of 1k → 1M nodes,
-    * REQUIRES every node labeled with the component minimum, and
-    * REQUIRES the round count within 2·log₂(n)+8 — growth per 10× of
-    * diameter must stay a handful of rounds, not 10×. */
-  private def chainProbe(spark: SparkSession): Unit = {
-    println(f"${"n"}%-9s ${"diameter"}%-9s ${"rounds"}%-7s ${"sec"}%8s  bound")
-    var prevRounds = 0
-    for (n <- Seq(1000L, 10000L, 100000L, 1000000L)) {
-      val pairs = spark.range(n - 1)
-        .select(col("id").as("doc_a"), (col("id") + 1).as("doc_b"))
-        .repartition(32).materialized
-      val t0 = System.nanoTime()
-      val (labels, rounds) = graft.ops.Dedup.alternatingStar(pairs)
-      val sec = (System.nanoTime() - t0) / 1e9
-      val bad = labels.filter(col("label") =!= 0L).count()
-      val total = labels.count()
-      require(bad == 0 && total == n,
-        s"chain n=$n: $bad mislabeled of $total (component min is 0)")
-      val logBound = 2 * (64 - java.lang.Long.numberOfLeadingZeros(n)) + 8
-      require(rounds <= logBound,
-        s"chain n=$n: $rounds rounds exceeds the O(log n) bound $logBound")
-      println(f"$n%-9d ${n - 1}%-9d $rounds%-7d $sec%8.2f  <= $logBound " +
-        f"(min-label: ${n - 1} rounds)")
-      require(prevRounds == 0 || rounds <= prevRounds + 6,
-        s"rounds grew $prevRounds -> $rounds across one 10x step - not log-bound")
-      prevRounds = rounds
-      HarnessUtil.releaseAll(spark)
-    }
-  }
-
-  /** `stargate` mode: run [[graft.ops.Dedup.alternatingStar]] on a graph
-    * ABOVE the [[graft.ops.Dedup.SmallGraphMaxEdges]] size gate — the
-    * regime where `labelsFromPairs` actually routes to the distributed
-    * path in production (OpsSpec only forces the path on small graphs).
-    * The graph mixes the three topologies that stress CC differently,
-    * each ~1.5M edges (total ≈ 4.5M > the 4M gate), with ANALYTIC
-    * ground-truth labels:
-    *   - a 1.5M-node chain (diameter = n: the shape that killed
-    *     min-label propagation) — component min 0;
-    *   - a 1.5M-leaf star (max-degree hub: the skew shape) — min = hub;
-    *   - a 1.5M-node binary tree (log diameter, branching) — min = root.
-    * Asserts: every node of all three components carries its component
-    * minimum; round count ≤ [[graft.ops.Dedup.StarMaxRounds]] and within
-    * the 2·log₂(maxComponent)+8 empirical bound the chain probe pins;
-    * and label agreement with the single-task union-find
-    * ([[graft.ops.Dedup.unionFindLabels]]) re-resolving the star
-    * component — the two size-gated paths must agree above and below
-    * the gate. */
-  private def starGateProbe(spark: SparkSession): Unit = {
-    import graft.ops.Dedup
-    val n = 1500000L
-    val chain = spark.range(n - 1)
-      .select(col("id").as("doc_a"), (col("id") + 1).as("doc_b"))
-    val hub = 10000000L
-    val star = spark.range(n)
-      .select(lit(hub).as("doc_a"), (col("id") + hub + 1).as("doc_b"))
-    val root = 20000000L
-    val tree = spark.range(1, n)
-      .select((col("id") + root).as("doc_a"),
-        (expr("(id - 1) DIV 2") + root).as("doc_b"))
-    val pairs = chain.unionByName(star).unionByName(tree)
-      .repartition(32).materialized
-    val edges = pairs.count()
-    require(edges > Dedup.SmallGraphMaxEdges,
-      s"probe premise broken: $edges edges does not exceed the " +
-        s"${Dedup.SmallGraphMaxEdges}-edge gate")
-    val parts = Dedup.pairGraphPartitions(edges)
-    val t0 = System.nanoTime()
-    val (labels, rounds) = Dedup.alternatingStar(pairs.repartition(parts))
-    val sec = (System.nanoTime() - t0) / 1e9
-    val expected = when(col("doc_id") < n, lit(0L))
-      .when(col("doc_id") < root, lit(hub))
-      .otherwise(lit(root))
-    val bad = labels.filter(col("label") =!= expected).count()
-    val total = labels.count()
-    require(bad == 0 && total == 3 * n + 1,
-      s"stargate: $bad mislabeled of $total (expected ${3 * n + 1} nodes, 0 bad)")
-    val logBound = 2 * (64 - java.lang.Long.numberOfLeadingZeros(n)) + 8
-    require(rounds <= Dedup.StarMaxRounds && rounds <= logBound,
-      s"stargate: $rounds rounds exceeds bound min($logBound, ${Dedup.StarMaxRounds})")
-    // gate-agreement arm: union-find (the below-gate path) re-resolves
-    // the star component; its labels must match the distributed result
-    val starEdges = pairs.filter(col("doc_a") === hub)
-    val uf = Dedup.unionFindLabels(spark, starEdges)
-      .withColumnRenamed("label", "uf_label")
-    val disagree = labels
-      .filter(col("doc_id") >= hub && col("doc_id") < root)
-      .join(uf, "doc_id")
-      .filter(col("label") =!= col("uf_label")).count()
-    require(disagree == 0, s"stargate: $disagree union-find disagreements on the star")
-    println(f"stargate: edges=$edges%,d (> gate ${Dedup.SmallGraphMaxEdges}%,d) " +
-      f"parts=$parts rounds=$rounds (bound min($logBound, ${Dedup.StarMaxRounds})) " +
-      f"nodes=$total%,d mislabeled=$bad union-find-disagree=$disagree sec=$sec%.1f")
-    HarnessUtil.releaseAll(spark)
-  }
-
-  /** `skew` mode: the probe that ADJUDICATED (and removed) the former
-    * `Skew.saltedAgg` API — a hot-key (50% of all rows on ONE key)
-    * aggregation, direct groupBy vs the two-stage salted rewrite
-    * (inlined below, preserved as reproducible evidence), at 10M and
-    * 100M rows. For ALGEBRAIC aggregates Spark's map-side partial
-    * aggregation already collapses a hot key to one row PER MAP TASK
-    * before the exchange, so the hot key's reducer receives ≤ #maps rows
-    * regardless of skew — the salted form can only add a second shuffle
-    * on top of that. Measured (local[32], r9): direct 1.15 s / salted
-    * 1.21 s at 10M; direct 4.25 s / salted 5.16 s at 100M — the salted
-    * "guard rail" is strictly a regression wherever partial aggregation
-    * exists, which is every aggregate the API's own doc scoped it to
-    * (sum/count/min/max). Aggregation skew that partial aggregation
-    * canNOT absorb (per-group ORDERING, collect_list-sized state) is
-    * handled where it arises: `Prims.groupedRowNumber`'s two-phase rank
-    * and the edge-count-gated cluster paths. Join-side skew belongs to
-    * AQE's skew-join handling. */
-  private def skewProbe(spark: SparkSession): Unit = {
-    for (n <- Seq(10000000L, 100000000L)) {
-      // materialize the input ONCE (outside every timing) so both arms
-      // aggregate identical checkpointed blocks — otherwise the 100M-row
-      // generation+repartition dominates and the arms differ only in
-      // noise; median-of-3 with forced GC for the same reason
-      val df = spark.range(n).select(
-          when(pmod(col("id"), lit(2)) === 0, lit(0L))
-            .otherwise(pmod(col("id"), lit(100000L))).as("k"),
-          (col("id") % 1000).as("v"))
-        .repartition(32)
-        .materialized
-      def time(label: String)(mk: => DataFrame): Unit = {
-        mk.count() // warm
-        // NOT releaseAll between samples: that would drop df's checkpoint
-        // blocks (the very input under test); the agg arms pin nothing
-        // themselves, so a forced GC alone keeps samples independent
-        System.gc()
-        val samples = (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          mk.count()
-          val dt = (System.nanoTime() - t0) / 1e9
-          System.gc()
-          dt
-        }.sorted
-        println(f"skew n=$n%-11d $label%-8s med=${samples(1)}%6.2f s " +
-          f"(min=${samples.head}%.2f max=${samples.last}%.2f)")
-      }
-      time("direct") {
-        df.groupBy(col("k")).agg(sum("v").as("s"), count(lit(1)).as("c"))
-      }
-      time("salted") {
-        df.withColumn("__salt",
-            pmod(spark_partition_id() + monotonically_increasing_id(), lit(32)))
-          .groupBy(col("k"), col("__salt"))
-          .agg(sum("v").as("s"), count(lit(1)).as("c"))
-          .groupBy(col("k"))
-          .agg(sum("s").as("s"), sum("c").as("c"))
-      }
-      HarnessUtil.releaseAll(spark, gc = true) // now df's blocks may go
-    }
-  }
-
-  /** `aqeskew` mode: the evidence the saltedAgg adjudication deferred to
-    * — JOIN-side skew is AQE's job, so show AQE actually doing it on a
-    * hostile shape, and show where the ENGINE's own joins stand. Arm 1:
-    * a 20M-row fact with 50% of rows on ONE key, sort-merge-joined to a
-    * dim side too large to broadcast; with skew-join handling ON the
-    * final adaptive plan must carry `skew=true` (asserted, not eyeballed)
-    * and the wall is compared against the identical join with skew
-    * handling OFF (one reducer sorts+joins the hot key alone). The
-    * skewed-partition THRESHOLD is scaled to probe hardware (the default
-    * 256 MB is production-executor sizing; the hot partition here is
-    * ~150 MB of join input — at 100 TB the defaults fire unmodified, and
-    * the knob is per-deployment sizing, not semantics). Arm 2: the
-    * engine's real data-sized joins (decontaminate's confirm join, the
-    * minhash bucket join) are executed as-shipped and their JOIN NODE
-    * TYPES printed from the executed plan — the family's broadcast
-    * (results-sized confirm) and df-capped/hub-starred bucket keys mean
-    * skew never reaches a sort-merge reducer in the first place; AQE is
-    * the backstop for shapes the caps don't pre-bound, not the first
-    * line of defense. */
-  /** `layout` mode: measure what `storage.Layout` buys at sf0.1 on the
-    * Q18-shape workload (per-order lineitem aggregate joined back to
-    * orders, threshold filter) — RAW parquet layout vs BUCKETED tables
-    * (32 buckets on the order key, both sides). Auto-broadcast is off so
-    * both layouts plan the 100 TB join (SMJ): raw pays the groupBy
-    * exchange on lineitem plus the join exchange on orders every run;
-    * bucketed paid one shuffle at WRITE time and then runs with zero
-    * exchanges. Reports wall medians, per-run shuffle-write bytes, and
-    * the plans' exchange counts — the recurring-cost arithmetic that
-    * justifies the layout at scale. */
-  private def layoutProbe(spark: SparkSession, src: String): Unit = {
-    import graft.storage.Layout
-    import graft.ops.Prims.dec2
-
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        Option(te.taskMetrics)
-          .foreach(m => { shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten); () })
-    })
-    def drained(): Long = { HarnessUtil.drainListeners(spark); shuffleBytes.get() }
-
-    def workload(li: DataFrame, ord: DataFrame): Long =
-      li.groupBy("l_orderkey")
-        .agg(sum(dec2(col("l_quantity"))).cast("double").as("sum_qty"))
-        .filter(col("sum_qty") > 250)
-        .join(ord.select("o_orderkey", "o_totalprice"),
-          col("l_orderkey") === col("o_orderkey"))
-        .count()
-
-    val base = "/tmp/graft_layout_probe"
-    val tw0 = System.nanoTime()
-    Layout.writeBucketed(spark.read.parquet(s"$src/lineitem.parquet"),
-      "probe_li", s"$base/li", "l_orderkey", 32)
-    Layout.writeBucketed(spark.read.parquet(s"$src/orders.parquet"),
-      "probe_ord", s"$base/ord", "o_orderkey", 32)
-    val writeSec = (System.nanoTime() - tw0) / 1e9
-
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      println(f"${"layout"}%-10s ${"med(s)"}%8s ${"shufMB/run"}%11s ${"exchanges"}%10s")
-      Seq(
-        ("raw", () => (spark.read.parquet(s"$src/lineitem.parquet"),
-          spark.read.parquet(s"$src/orders.parquet"))),
-        ("bucketed", () => (Layout.table(spark, "probe_li"),
-          Layout.table(spark, "probe_ord")))
-      ).foreach { case (label, mk) =>
-        val (li, ord) = mk()
-        val plan = li.groupBy("l_orderkey")
-          .agg(sum(dec2(col("l_quantity"))).cast("double").as("sum_qty"))
-          .filter(col("sum_qty") > 250)
-          .join(ord.select("o_orderkey", "o_totalprice"),
-            col("l_orderkey") === col("o_orderkey"))
-          .queryExecution.executedPlan.toString
-        val nExch = "(?<!Broadcast)(?<!Reused)Exchange ".r.findAllIn(plan).size
-        workload(li, ord) // warm
-        HarnessUtil.releaseAll(spark, gc = true)
-        val sb0 = drained()
-        val samples = (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          workload(li, ord)
-          val dt = (System.nanoTime() - t0) / 1e9
-          HarnessUtil.releaseAll(spark, gc = true)
-          dt
-        }.sorted
-        val mb = (drained() - sb0) / 3.0 / 1024 / 1024
-        println(f"$label%-10s ${samples(1)}%8.2f $mb%11.1f $nExch%10d")
-      }
-      println(f"(one-time bucketed write: $writeSec%.2f s for both tables)")
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.sql("DROP TABLE IF EXISTS probe_li")
-      spark.sql("DROP TABLE IF EXISTS probe_ord")
-    }
-  }
-
-  /** `custkey` mode: is the custkey exchange (orders⋈customer in
-    * q13/q18) worth a THIRD co-bucketed fact layout? Evidence gathered:
-    * (1) raw q13/q18 wall + shuffle at sf0.1 and 10×, with a count of
-    * how many of each plan's exchanges actually key on custkey;
-    * (2) a direct A/B of the q13 core against an ad-hoc custkey
-    * co-bucketed (orders, customer) pair at 10×, broadcast disabled so
-    * the comparison models the at-scale SMJ path (at 100 TB customer
-    * does not broadcast). Ship the layout only if the custkey exchange
-    * DOMINATES the raw wall at 10× — the r14 verdict's decision rule. */
-  private def custkeyProbe(spark: SparkSession, src: String, big: String): Unit = {
-    import graft.storage.Layout
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        Option(te.taskMetrics)
-          .foreach(m => { shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten); () })
-    })
-    def drained(): Long = { HarnessUtil.drainListeners(spark); shuffleBytes.get() }
-    def timed(mk: () => DataFrame): (Double, Double) = {
-      mk().count() // warm
-      HarnessUtil.releaseAll(spark, gc = true)
-      val sb0 = drained()
-      val samples = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        mk().count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        HarnessUtil.releaseAll(spark, gc = true)
-        dt
-      }.sorted
-      (samples(1), (drained() - sb0) / 3.0 / 1024 / 1024)
-    }
-
-    println(f"${"query"}%-10s ${"dir"}%-6s ${"med(s)"}%8s ${"shufMB"}%8s ${"custkey-exch/total"}%18s")
-    for ((label, dir) <- Seq("sf0.1" -> src, "10x" -> big); qn <- Seq("tpch_q13", "tpch_q18")) {
-      val fn = SparkEntry.queries(qn)
-      val plan = fn(spark, dir).queryExecution.executedPlan.toString
-      val exchLines = plan.linesIterator.filter(_.contains("Exchange hashpartitioning")).toSeq
-      val ck = exchLines.count(_.contains("custkey"))
-      val (med, mb) = timed(() => fn(spark, dir))
-      println(f"$qn%-10s $label%-6s $med%8.2f $mb%8.1f ${s"$ck/${exchLines.size}"}%18s")
-    }
-
-    // A/B: the q13 core on raw vs custkey co-bucketed pair at 10×
-    def q13Core(c: DataFrame, o: DataFrame): DataFrame =
-      c.select("c_custkey")
-        .join(o.filter(col("o_orderpriority") =!= "4-NOT SPECIFIED")
-          .select("o_custkey", "o_orderkey"),
-          col("c_custkey") === col("o_custkey"), "left_outer")
-        .groupBy("c_custkey")
-        .agg(count(col("o_orderkey")).as("c_count"))
-        .groupBy("c_count")
-        .agg(count(lit(1)).as("custdist"))
-    val base = "/tmp/graft_custkey_probe"
-    val n = math.max(Layout.autoBuckets(
-      new java.io.File(s"$big/orders.parquet").listFiles()
-        .filter(_.isFile).map(_.length).sum),
-      spark.sparkContext.defaultParallelism)
-    val tw0 = System.nanoTime()
-    Layout.writeBucketed(spark.read.parquet(s"$big/orders.parquet"),
-      "ckp_ord", s"$base/ord", "o_custkey", n)
-    Layout.writeBucketed(spark.read.parquet(s"$big/customer.parquet"),
-      "ckp_cust", s"$base/cust", "c_custkey", n)
-    val writeSec = (System.nanoTime() - tw0) / 1e9
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      println(f"${"q13-core@10x"}%-14s ${"med(s)"}%8s ${"shufMB"}%8s ${"exchanges"}%10s")
-      Seq(
-        ("raw", () => q13Core(spark.read.parquet(s"$big/customer.parquet"),
-          spark.read.parquet(s"$big/orders.parquet"))),
-        ("ck-bucketed", () => q13Core(Layout.table(spark, "ckp_cust"),
-          Layout.table(spark, "ckp_ord")))
-      ).foreach { case (label, mk) =>
-        val plan = mk().queryExecution.executedPlan.toString
-        val nExch = "(?<!Broadcast)(?<!Reused)Exchange ".r.findAllIn(plan).size
-        val (med, mb) = timed(() => mk())
-        println(f"$label%-14s $med%8.2f $mb%8.1f $nExch%10d")
-      }
-      println(f"(one-time custkey bucketed write at 10x: $writeSec%.2f s, $n buckets)")
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.sql("DROP TABLE IF EXISTS ckp_ord")
-      spark.sql("DROP TABLE IF EXISTS ckp_cust")
-    }
-  }
-
-  /** `eventslayout` mode: the three events serving arms at 10× — raw,
-    * date-only directories (the shipped default under
-    * `layout.events.enabled`), and the COMPOSED date+user_id-bucketed
-    * form (`layout.events.buckets=N`) — over the time family. Decision
-    * input for whether the composed layout should ever be the default:
-    * the user-keyed full-scan members (funnel/sessionize/cohort) trade
-    * their user_id exchange against dirs × buckets file fragmentation,
-    * and the crossover is a data-scale property this probe records
-    * honestly at fixture scale. */
-  private def eventsLayoutProbe(spark: SparkSession, big: String): Unit = {
-    import graft.storage.Layout
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        Option(te.taskMetrics)
-          .foreach(m => { shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten); () })
-    })
-    def drained(): Long = { HarnessUtil.drainListeners(spark); shuffleBytes.get() }
-    def timed(mk: () => DataFrame): (Double, Double) = {
-      mk().count() // warm
-      HarnessUtil.releaseAll(spark, gc = true)
-      val sb0 = drained()
-      val samples = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        mk().count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        HarnessUtil.releaseAll(spark, gc = true)
-        dt
-      }.sorted
-      (samples(1), (drained() - sb0) / 3.0 / 1024 / 1024)
-    }
-    val qs = Seq("events_incremental_rollup", "events_week_compare",
-      "events_rollup", "funnel", "sessionize", "cohort_retention",
-      "asof_attribution")
-    val arms = Seq(
-      ("raw", () => { spark.conf.set(Layout.EventsEnabledKey, "false") }),
-      ("date-only", () => { spark.conf.set(Layout.EventsEnabledKey, "true")
-        spark.conf.set(Layout.EventsBucketsKey, "0") }),
-      ("composed-32", () => { spark.conf.set(Layout.EventsEnabledKey, "true")
-        spark.conf.set(Layout.EventsBucketsKey, "32") }))
-    try {
-      println(f"${"query"}%-28s ${"arm"}%-12s ${"med(s)"}%8s ${"shufMB"}%8s")
-      for (q <- qs; (label, set) <- arms) {
-        set()
-        val fn = SparkEntry.queries(q)
-        val (med, mb) = timed(() => fn(spark, big))
-        println(f"$q%-28s $label%-12s $med%8.2f $mb%8.1f")
-      }
-    } finally {
-      spark.conf.set(Layout.EventsEnabledKey, "false")
-      spark.conf.set(Layout.EventsBucketsKey, "0")
-    }
-  }
-
-  /** `sealcost` mode: price the nightly seal job at 10× volume with a
-    * realistic micro-batch file count — the number a capacity plan
-    * needs. A live ingest at 30 s triggers lands ~2,880 micro-batch
-    * files into "today's" directory over a day; the fixture reproduces
-    * exactly that shape (the day being closed out fragmented into 2,880
-    * KB-sized files, every other day healthy), then measures:
-    * [[graft.streaming.PartitionedIngest.sealDays]] on the fragmented
-    * day (the nightly incremental form — files before/after + wall),
-    * the FULL [[graft.streaming.PartitionedIngest.seal]] for reference,
-    * and reader throughput on the live sink DURING the seal vs alone —
-    * the "does the nightly job starve the dashboards" number. */
-  private def sealCostProbe(spark: SparkSession, big: String): Unit = {
-    import graft.storage.Layout
-    val base = "/tmp/graft_sealcost"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-    val (sink, serving) = (s"$base/sink", s"$base/serving")
-    val ev = Tables.events(spark, big)
-      .withColumn("ts_date", Layout.utcDate(col("ts")))
-    val today = ev.select(max(col("ts_date"))).head.getDate(0).toString
-    // healthy days + today fragmented into 2,880 trigger-sized files
-    ev.filter(col("ts_date") =!= lit(today).cast("date"))
-      .write.partitionBy("ts_date").parquet(sink)
-    ev.filter(col("ts_date") === lit(today).cast("date"))
-      .repartition(2880)
-      .write.mode("append").partitionBy("ts_date").parquet(sink)
-    Layout.markUtcDays(spark, sink)
-    def filesIn(dir: String): Int = {
-      val d = new java.io.File(dir)
-      if (!d.exists()) 0 else d.listFiles().count(_.getName.startsWith("part-"))
-    }
-    val todayDir = s"ts_date=$today"
-    val totalRows = spark.read.parquet(sink).count()
-    val todayRows = spark.read.parquet(s"$sink/$todayDir").count()
-    println(s"sink: $totalRows rows, today=$today with " +
-      s"${filesIn(s"$sink/$todayDir")} files ($todayRows rows)")
-
-    // reader workload: the day-rollup a dashboard would run against the
-    // live sink (prunes to today's fragmented directory — worst case)
-    def rollup(): Long = spark.read.parquet(sink)
-      .filter(col("ts_date") === lit(today).cast("date"))
-      .groupBy("event_type").count().collect().map(_.getLong(1)).sum
-    rollup() // warm
-    val alone = (1 to 3).map { _ =>
-      val t0 = System.nanoTime(); rollup(); (System.nanoTime() - t0) / 1e9
-    }.sorted.apply(1)
-
-    // first seal: everything except today (yesterday's close-out state)
-    graft.streaming.PartitionedIngest.seal(spark, sink, serving)
-    // nightly incremental: re-seal the fragmented day, reader concurrent
-    @volatile var sealing = true
-    val readerIters = new java.util.concurrent.atomic.AtomicInteger
-    val reader = new Thread(() => while (sealing) { rollup(); readerIters.incrementAndGet(); () })
-    reader.start()
-    val t0 = System.nanoTime()
-    val sealedRows = graft.streaming.PartitionedIngest.sealDays(
-      spark, sink, serving, Seq(today))
-    val sealSec = (System.nanoTime() - t0) / 1e9
-    sealing = false
-    reader.join()
-    val during = (1 to 3).map { _ =>
-      val t0b = System.nanoTime(); rollup(); (System.nanoTime() - t0b) / 1e9
-    }.sorted.apply(1)
-    println(f"sealDays($today): ${filesIn(s"$sink/$todayDir")} files -> " +
-      f"${filesIn(s"$serving/$todayDir")} files, $sealedRows rows, $sealSec%.2f s " +
-      f"(${sealedRows / sealSec / 1000}%.0f Krows/s)")
-    println(f"reader day-rollup: alone $alone%.2f s/run; during seal " +
-      f"${readerIters.get()} runs in $sealSec%.2f s " +
-      f"(${if (readerIters.get() > 0) sealSec / readerIters.get() else Double.NaN}%.2f s/run); after $during%.2f s/run")
-
-    // full-seal reference: the O(table) snapshot form
-    val tf0 = System.nanoTime()
-    val stats = graft.streaming.PartitionedIngest.seal(spark, sink, serving)
-    val fullSec = (System.nanoTime() - tf0) / 1e9
-    println(f"full seal: ${stats.rowsSealed} rows, $fullSec%.2f s " +
-      f"(${stats.rowsSealed / fullSec / 1000}%.0f Krows/s)")
-  }
-
-  /** `sealversioned` mode: prices the snapshot-isolated serving copy
-    * ([[graft.storage.VersionedServing]]) against the in-place form on
-    * the worst 10× day shape (today fragmented into 2,880 trigger-sized
-    * files — the sealcost fixture), and runs the reader-vs-reseal race
-    * AGAINST THE SERVING COPY ITSELF: r16's probe measured readers
-    * against the live sink during a seal, which left the serving-side
-    * atomicity untested — exactly the seam the versioned layout closes.
-    * Reports: in-place vs versioned sealDays wall (same day, same
-    * bytes), the metadata-only flip cost (an expire publish), the
-    * serve-path read cost on both forms (the manifest resolve + listing
-    * overhead the versioned read adds), and reader outcomes during a
-    * concurrent re-seal of the scanned day on both forms. */
-  private def sealVersionedProbe(spark: SparkSession, big: String): Unit = {
-    import graft.storage.{Layout, VersionedServing}
-    val base = "/tmp/graft_sealver"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-    val (sink, inPlace, versioned) = (s"$base/sink", s"$base/inplace", s"$base/versioned")
-    val ev = Tables.events(spark, big)
-      .withColumn("ts_date", Layout.utcDate(col("ts")))
-    val today = ev.select(max(col("ts_date"))).head.getDate(0).toString
-    ev.filter(col("ts_date") =!= lit(today).cast("date"))
-      .write.partitionBy("ts_date").parquet(sink)
-    ev.filter(col("ts_date") === lit(today).cast("date"))
-      .repartition(2880)
-      .write.mode("append").partitionBy("ts_date").parquet(sink)
-    Layout.markUtcDays(spark, sink)
-    def med3(body: => Unit): Double = (1 to 3).map { _ =>
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }.sorted.apply(1)
-
-    // yesterday's close-out state on both forms
-    graft.streaming.PartitionedIngest.seal(spark, sink, inPlace)
-    val vStats = VersionedServing.seal(spark, sink, versioned)
-    println(s"sink sealed both ways: ${vStats.rowsSealed} rows, today=$today fragmented")
-
-    // the nightly incremental on the SAME fragmented day, both forms
-    val tIp = { val t0 = System.nanoTime()
-      graft.streaming.PartitionedIngest.sealDays(spark, sink, inPlace, Seq(today))
-      (System.nanoTime() - t0) / 1e9 }
-    val tV = { val t0 = System.nanoTime()
-      VersionedServing.sealDays(spark, sink, versioned, Seq(today))
-      (System.nanoTime() - t0) / 1e9 }
-    println(f"sealDays($today): in-place $tIp%.2f s, versioned $tV%.2f s " +
-      f"(${tV / tIp}%.2fx — the isolation premium)")
-
-    // flip cost alone: a metadata-only publish (expire of a day outside
-    // the table is a no-op publish path; use the oldest real day once)
-    val oldest = VersionedServing.servedDays(spark, versioned).head
-    val tFlip = { val t0 = System.nanoTime()
-      VersionedServing.expire(spark, versioned, oldest) // drops nothing (oldest kept)
-      VersionedServing.expire(spark, versioned,
-        java.time.LocalDate.parse(oldest).plusDays(1).toString) // drops 1 day: manifest write + flip
-      (System.nanoTime() - t0) / 1e9 }
-    println(f"manifest publish+flip (metadata-only expire): $tFlip%.3f s")
-
-    // serve-path read cost: resolve+list+plan+count on both forms
-    val rIp = med3(spark.read.parquet(inPlace)
-      .filter(col("ts_date") === lit(today).cast("date"))
-      .groupBy("event_type").count().collect())
-    val rV = med3(Layout.servingEvents(spark, versioned)
-      .filter(col("ts") >= lit(s"$today 00:00:00").cast("timestamp"))
-      .groupBy("event_type").count().collect())
-    println(f"day-rollup on serving copy: in-place $rIp%.2f s, versioned $rV%.2f s " +
-      f"(manifest resolve + per-day listing overhead: ${rV - rIp}%.2f s)")
-
-    // the race the r16 probe could not run: readers scanning the serving
-    // copy WHILE the day they scan is being resealed
-    def race(label: String, read: () => Long, reseal: () => Unit): Unit = {
-      val errors = new java.util.concurrent.atomic.AtomicInteger
-      val runs = new java.util.concurrent.atomic.AtomicInteger
-      @volatile var go = true
-      val th = new Thread(() => while (go) {
-        try { read(); runs.incrementAndGet() }
-        catch { case _: Throwable => errors.incrementAndGet() } })
-      spark.sparkContext.setLogLevel("OFF")
-      th.start()
-      val t0 = System.nanoTime(); reseal(); val sec = (System.nanoTime() - t0) / 1e9
-      go = false; th.join()
-      spark.sparkContext.setLogLevel("ERROR")
-      println(f"$label: ${runs.get()} reader runs, ${errors.get()} reader FAILURES " +
-        f"during a $sec%.2f s re-seal of the scanned day")
-    }
-    race("in-place ", () => spark.read.parquet(inPlace)
-        .filter(col("ts_date") === lit(today).cast("date")).count(),
-      () => { graft.streaming.PartitionedIngest.sealDays(spark, sink, inPlace, Seq(today)); () })
-    race("versioned", () => Layout.servingEvents(spark, versioned)
-        .filter(col("ts") >= lit(s"$today 00:00:00").cast("timestamp")).count(),
-      () => { VersionedServing.sealDays(spark, sink, versioned, Seq(today)); () })
-  }
-
-  /** `zserve` mode: prices the Z-ORDERED seal ([[
-    * graft.storage.VersionedServing.sealDays]]'s `zorder`) against the
-    * plain one on a dense 10× day, and measures what the layout buys a
-    * reader: per-file min/max skipping on BOTH cluster columns — judged
-    * with the same per-file footer-stat decision a parquet scan makes
-    * ([[graft.storage.Layout.filesTouched]]) — plus the wall win on the
-    * dashboard box slice through the production serving accessor. The
-    * fixture is ONE day at 10× the whole table's volume (every event
-    * remapped to its intraday second), because within-day selectivity
-    * is exactly what the date directories cannot give: directories
-    * prune the day, the curve prunes inside it. Self-sufficient: builds
-    * the dense day from `src` directly. */
-  private def zServeProbe(spark: SparkSession, src: String, mult: Int = 10): Unit = {
-    import graft.storage.{Layout, VersionedServing}
-    val base = "/tmp/graft_zserve"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-    val (sink, plain, zroot) = (s"$base/sink", s"$base/plain", s"$base/z")
-    val day = "2024-03-01"
-    val dayT0 = 1709251200L // that day's UTC midnight
-    val dense = Tables.eventsNormalized(spark, src)
-      .crossJoin(spark.range(mult).select(col("id").as("copy")))
-      .withColumn("event_id", col("event_id") + col("copy") * 10000000L)
-      .withColumn("user_id", col("user_id") + col("copy") * 1000L)
-      .withColumn("ts",
-        (lit(dayT0) + pmod(col("ts").cast("long"), lit(86400L))).cast("timestamp"))
-      .drop("copy")
-      .withColumn("ts_date", Layout.utcDate(col("ts")))
-    dense.write.partitionBy("ts_date").parquet(sink)
-    Layout.markUtcDays(spark, sink)
-    val rows = spark.read.parquet(sink).count()
-    println(s"dense day at $sink: $rows rows in ts_date=$day")
-
-    def med3[T](body: => T): Double = (1 to 3).map { _ =>
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }.sorted.apply(1)
-    val target = 512L * 1024 // ~16 files for the 10× day — a real day's many-file shape
-
-    val tP = { val t0 = System.nanoTime()
-      VersionedServing.sealDays(spark, sink, plain, Seq(day), targetBytes = target)
-      (System.nanoTime() - t0) / 1e9 }
-    val tZ = { val t0 = System.nanoTime()
-      VersionedServing.sealDays(spark, sink, zroot, Seq(day), targetBytes = target,
-        zorder = Some(("user_id", "ts")))
-      (System.nanoTime() - t0) / 1e9 }
-    println(f"sealDays($day): plain $tP%.2f s, z-ordered $tZ%.2f s " +
-      f"(${tZ / tP}%.2fx — the clustering premium: one bound pass + range-for-roundrobin)")
-
-    // the layout never changes an answer
-    def sig(root: String) = Layout.servingEvents(spark, root)
-      .agg(count(lit(1)).as("n"),
-        sum(hash(col("event_id"), col("user_id"), col("ts")).cast("long")).as("h")).head
-    val (sp, sz) = (sig(plain), sig(zroot))
-    require(sp == sz, s"arms must serve identical data: plain=$sp z=$sz")
-    println(s"identity: both arms serve ${sp.getLong(0)} rows, same content hash")
-
-    // footer-stat skipping on the day's files, as a parquet scan judges it
-    val ur = dense.agg(min("user_id").cast("long"), max("user_id").cast("long")).head
-    val (uLo, uHi) = (ur.getLong(0), ur.getLong(1))
-    val uW = (uHi - uLo + 1) / 8
-    val uBox = ("user_id", uLo + 3 * uW, uLo + 4 * uW - 1)   // middle 1/8 of users
-    val tBox = ("ts", dayT0 + 6L * 3600, dayT0 + 9L * 3600 - 1) // 06:00–09:00
-    val (pDay, zDay) = (s"$plain/data/${VersionedServing.GenCol}=1/ts_date=$day",
-      s"$zroot/data/${VersionedServing.GenCol}=1/ts_date=$day")
-    for ((label, box) <- Seq(("user 1/8 slice", Seq(uBox)), ("3 h time slice", Seq(tBox)),
-        ("user × time box", Seq(uBox, tBox)))) {
-      val (pT, pN) = Layout.filesTouched(spark, pDay, box)
-      val (zT, zN) = Layout.filesTouched(spark, zDay, box)
-      println(f"$label%-16s plain touches $pT/$pN files, z-ordered $zT/$zN")
-    }
-
-    // wall on the dashboard box through the production accessor
-    def boxScan(root: String) = med3(Layout.servingEvents(spark, root)
-      .filter(col("user_id").between(uBox._2, uBox._3) &&
-        col("ts").between(
-          java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(tBox._2)),
-          java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(tBox._3))))
-      .groupBy("event_type").agg(count(lit(1)), sum("value")).collect())
-    val (wP, wZ) = (boxScan(plain), boxScan(zroot))
-    println(f"box scan med-of-3: plain $wP%.3f s, z-ordered $wZ%.3f s (${wZ / wP}%.2fx)")
-  }
-
-  /** `bloomserve` mode: prices the BLOOM-FILTERED seal
-    * ([[graft.storage.VersionedServing.sealDays]]'s `writeOptions` +
-    * [[graft.storage.Layout.bloomOptions]]) against the plain one on a
-    * dense 10× day, and measures what the filter buys a POINT LOOKUP:
-    * row-group skipping on `event_id = x`, judged with parquet-mr's own
-    * three-level row-group filter ([[graft.storage.Layout
-    * .rowGroupsTouched]] — stats + dictionary + bloom, the decision a
-    * Spark scan's reader makes before decoding). The fixture sizes row
-    * groups so the id column's per-chunk cardinality overflows the 1 MB
-    * dictionary page NATURALLY — the regime every unique-id column is
-    * in at warehouse scale (a 128 MB row group of int64 ids needs an
-    * 8× bigger dictionary than parquet allows), where dictionary
-    * filtering cannot act and stats cannot bound a mid-range id:
-    * bloom is the only skip. Ids are doubled to even so an odd probe
-    * is provably absent yet inside every file's [min,max]. */
-  private def bloomServeProbe(spark: SparkSession, src: String, mult: Int = 10): Unit = {
-    import graft.storage.{Layout, VersionedServing}
-    val base = "/tmp/graft_bloomserve"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-    val (sink, plain, broot) = (s"$base/sink", s"$base/plain", s"$base/bloom")
-    val day = "2024-03-01"
-    val dayT0 = 1709251200L
-    val dense = Tables.eventsNormalized(spark, src)
-      .crossJoin(spark.range(mult).select(col("id").as("copy")))
-      .withColumn("event_id", (col("event_id") + col("copy") * 10000000L) * 2L)
-      .withColumn("user_id", col("user_id") + col("copy") * 1000L)
-      .withColumn("ts",
-        (lit(dayT0) + pmod(col("ts").cast("long"), lit(86400L))).cast("timestamp"))
-      .drop("copy")
-      .withColumn("ts_date", Layout.utcDate(col("ts")))
-    dense.write.partitionBy("ts_date").parquet(sink)
-    Layout.markUtcDays(spark, sink)
-    val rows = spark.read.parquet(sink).count()
-    println(s"dense day at $sink: $rows rows in ts_date=$day")
-
-    // ≥150k rows per file ⇒ >1 MB of distinct int64 ids per row group ⇒
-    // the dictionary overflows on its own, as it does at 128 MB groups
-    val target = 4L * 1024 * 1024
-    // untimed warm-up seal: the first job pays scan-cold + JIT, which
-    // otherwise lands entirely on whichever arm runs first; then two
-    // interleaved samples per arm (re-seals into the same root — the
-    // nightly shape) so a machine drift can't masquerade as the premium
-    VersionedServing.sealDays(spark, sink, s"$base/warm", Seq(day), targetBytes = target)
-    // size the ndv hint from the ACTUAL file shape the warm-up produced
-    // (same sink, same targetBytes): an under-sized hint quietly
-    // inflates the fpp — the §12 100× run caught a false positive at
-    // a 262k hint against 476k actual ids per file
-    val warmFiles = new java.io.File(s"$base/warm/data/${VersionedServing.GenCol}=1/ts_date=$day")
-      .listFiles().count(_.getName.endsWith(".parquet"))
-    // the hint is rows/file EXACTLY: parquet sizes optimal bits from it
-    // and rounds to a power of two itself — pre-rounding the hint up
-    // can double the filter for nothing (a 1.05M hint on 476k actual
-    // ids cost 2 MB/file where 1 MB holds 1% fpp)
-    val ndvPerFile = math.max(1L, rows / math.max(1, warmFiles))
-    println(s"warm-up shape: $warmFiles files ⇒ ndv hint $ndvPerFile")
-    def sealArm(root: String, opts: Map[String, String]): Double = {
-      val t0 = System.nanoTime()
-      VersionedServing.sealDays(spark, sink, root, Seq(day), targetBytes = target,
-        writeOptions = opts)
-      (System.nanoTime() - t0) / 1e9
-    }
-    val bloomOpts = Layout.bloomOptions(Map("event_id" -> ndvPerFile))
-    val samples = (1 to 2).map { _ => (sealArm(plain, Map.empty), sealArm(broot, bloomOpts)) }
-    val (tP, tB) = (samples.map(_._1).min, samples.map(_._2).min)
-    println(samples.map { case (p, b) => f"plain $p%.2f / bloom $b%.2f" }
-      .mkString("sealDays samples: ", " | ", ""))
-    println(f"sealDays($day) best-of-2: plain $tP%.2f s, bloom $tB%.2f s " +
-      f"(${tB / tP}%.2fx — the filter-build premium)")
-
-    def dirBytes(d: String): Long = {
-      val p = new org.apache.hadoop.fs.Path(d)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).getContentSummary(p).getLength
-    }
-    val (pDay, bDay) = (s"$plain/data/${VersionedServing.GenCol}=1/ts_date=$day",
-      s"$broot/data/${VersionedServing.GenCol}=1/ts_date=$day")
-    val (pBytes, bBytes) = (dirBytes(pDay), dirBytes(bDay))
-    println(f"bytes: plain ${pBytes / 1048576.0}%.1f MB, bloom ${bBytes / 1048576.0}%.1f MB " +
-      f"(+${(bBytes - pBytes) / 1024.0}%.0f KB footprint, ${(bBytes - pBytes) * 100.0 / pBytes}%.2f%%)")
-
-    // the knob never changes an answer
-    def sig(root: String) = Layout.servingEvents(spark, root)
-      .agg(count(lit(1)).as("n"),
-        sum(hash(col("event_id"), col("user_id"), col("ts")).cast("long")).as("h")).head
-    val (sp, sb) = (sig(plain), sig(broot))
-    require(sp == sb, s"arms must serve identical data: plain=$sp bloom=$sb")
-    println(s"identity: both arms serve ${sp.getLong(0)} rows, same content hash")
-
-    // row-group touch decision, as parquet-mr's reader makes it; probe
-    // the MEDIAN id — an extreme id sits outside most files' [min,max]
-    // and stats alone would skip it, hiding the layer under test
-    val presentId = spark.read.parquet(pDay)
-      .stat.approxQuantile("event_id", Array(0.5), 0.0)(0).toLong // err 0 ⇒ an exact element
-    val absentOdd = presentId + 1L // odd ⇒ never written, but inside every [min,max]
-    for ((label, id) <- Seq(("absent odd id", absentOdd), ("present id", presentId))) {
-      val (pT, pN) = Layout.rowGroupsTouched(spark, pDay, "event_id", id)
-      val (bT, bN) = Layout.rowGroupsTouched(spark, bDay, "event_id", id)
-      println(f"$label%-14s plain touches $pT/$pN row groups, bloom $bT/$bN")
-    }
-
-    // wall on the point lookup through the production accessor
-    def med3[T](body: => T): Double = (1 to 3).map { _ =>
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }.sorted.apply(1)
-    def lookup(root: String, id: Long) = med3(Layout.servingEvents(spark, root)
-      .filter(col("event_id") === id).collect())
-    println(f"present-id lookup med-of-3: plain ${lookup(plain, presentId)}%.3f s, " +
-      f"bloom ${lookup(broot, presentId)}%.3f s")
-    println(f"absent-id lookup med-of-3:  plain ${lookup(plain, absentOdd)}%.3f s, " +
-      f"bloom ${lookup(broot, absentOdd)}%.3f s")
-  }
-
-  /** `touchseal` mode: builds a versioned serving copy through the
-    * SELF-DRIVING close-out path end-to-end — batch events staged, then
-    * ingested through a real FileStreamSink (commit log included), then
-    * sealed by [[graft.storage.VersionedServing.sealTouched]] with NO
-    * day list (the close-out derives it from the log). The root it
-    * leaves behind is the fixture for the serving-deployment identity
-    * proof: run the full `graft.Verify` surface with
-    * `SPARK_GRAFT_CONF="spark.graft.layout.events.enabled=true;
-    * spark.graft.layout.events.servingDir=/tmp/graft_touchserve/serving"`
-    * and every events consumer must hash-match DuckDB over the raw
-    * table — the r17 §4 proof re-run through the automated close-out. */
-  private def touchSealProbe(spark: SparkSession, src: String): Unit = {
-    import graft.storage.VersionedServing
-    val base = "/tmp/graft_touchserve"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-    val (staged, sink, ckpt, root) =
-      (s"$base/staged", s"$base/sink", s"$base/ckpt", s"$base/serving")
-    Tables.eventsNormalized(spark, src).write.parquet(staged)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(staged).schema).parquet(staged)
-    val q = graft.streaming.PartitionedIngest.start(stream, sink, ckpt)
-    q.processAllAvailable(); q.stop()
-    val stats = VersionedServing.sealTouched(spark, sink, root)
-    println(s"sealTouched close-out: ${stats.days.size} days discovered from the " +
-      s"commit log, ${stats.rowsSealed} rows, sealedThrough=${stats.sealedThrough}")
-    val idle = VersionedServing.sealTouched(spark, sink, root)
-    require(idle.days.isEmpty && idle.rowsSealed == 0,
-      s"an idle close-out must be a metadata-only no-op, got $idle")
-    println(s"idle close-out: no-op (bookmark ${idle.sealedThrough}); " +
-      s"serving root at $root ready for the Verify identity run")
-  }
-
-  /** `docserve` mode: build the VERSIONED DOCUMENTS corpus root — the
-    * serving fixture for the Verify identity run over the doc-family
-    * surface. Documents get a deterministic ingest date
-    * ([[graft.storage.Layout.docsWithIngestDate]]) and a bootstrap
-    * [[graft.storage.VersionedServing.sealFrame]]; the identity proof
-    * is then the FULL oracle surface served from this root:
-    * `SPARK_GRAFT_CONF="spark.graft.layout.documents.servingDir=
-    * /tmp/graft_docserve/serving" runMain graft.Verify ...` — every
-    * documents consumer reads the snapshot, every result must still
-    * hash-match DuckDB over the batch parquet. */
-  private def docServeProbe(spark: SparkSession, src: String): Unit = {
-    import graft.storage.{Layout, VersionedServing}
-    val base = "/tmp/graft_docserve"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-    val root = s"$base/serving"
-    val docs = Layout.docsWithIngestDate(Tables.documentsRaw(spark, src))
-    val stats = VersionedServing.sealFrame(spark, docs, root)
-    val days = VersionedServing.servedDays(spark, root)
-    val served = Layout.servingDocuments(spark, root)
-    println(s"versioned documents root at $root: ${days.size} ingest days " +
-      s"(${days.head}..${days.last}), ${stats.rowsSealed} rows, " +
-      s"version ${VersionedServing.currentVersion(spark, root)}; " +
-      s"served schema ${served.schema.fieldNames.mkString(",")} — " +
-      "ready for the Verify identity run (see scaladoc)")
-  }
-
-  /** `composedserve` mode: prices the COMPOSED z-order + bloom seal at
-    * the production-sized day — the one combination SCALEPROBE_r17
-    * identity-proved at sf0.01 but never priced at the 100× day shape.
-    * Four arms over one dense day (same fixture recipe as
-    * [[bloomServeProbe]]): plain, z-order only, bloom only, composed.
-    * Questions answered: (1) what does the composed close-out cost vs
-    * each single layer — is the premium additive or super-additive
-    * (the curve's range exchange reshapes the rows the filter build
-    * then hashes)? (2) does each layer keep its read-side win when
-    * composed — box-slice file pruning (curve) and absent-id row-group
-    * skipping (bloom) measured on the SAME generation? */
-  private def composedServeProbe(spark: SparkSession, src: String, mult: Int = 100): Unit = {
-    import graft.storage.{Layout, VersionedServing}
-    val base = "/tmp/graft_composedserve"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-    val day = "2024-03-01"
-    val dayT0 = 1709251200L
-    val sink = s"$base/sink"
-    val dense = Tables.eventsNormalized(spark, src)
-      .crossJoin(spark.range(mult).select(col("id").as("copy")))
-      .withColumn("event_id", (col("event_id") + col("copy") * 10000000L) * 2L)
-      .withColumn("user_id", col("user_id") + col("copy") * 1000L)
-      .withColumn("ts",
-        (lit(dayT0) + pmod(col("ts").cast("long"), lit(86400L))).cast("timestamp"))
-      .drop("copy")
-      .withColumn("ts_date", Layout.utcDate(col("ts")))
-    dense.write.partitionBy("ts_date").parquet(sink)
-    Layout.markUtcDays(spark, sink)
-    val rows = spark.read.parquet(sink).count()
-    println(s"dense day at $sink: $rows rows in ts_date=$day (mult=$mult)")
-
-    val target = 4L * 1024 * 1024
-    val zorder = Some(("user_id", "ts"))
-    // untimed warm-up (scan-cold + JIT), which also sizes the ndv hint
-    // from the actual file shape (bloomServeProbe's discipline)
-    VersionedServing.sealDays(spark, sink, s"$base/warm", Seq(day), targetBytes = target)
-    val warmFiles = new java.io.File(
-        s"$base/warm/data/${VersionedServing.GenCol}=1/ts_date=$day")
-      .listFiles().count(_.getName.endsWith(".parquet"))
-    val ndvPerFile = math.max(1L, rows / math.max(1, warmFiles))
-    println(s"warm-up shape: $warmFiles files ⇒ ndv hint $ndvPerFile")
-    val bloomOpts = Layout.bloomOptions(Map("event_id" -> ndvPerFile))
-
-    val arms = Seq(
-      ("plain", s"$base/plain", None, Map.empty[String, String]),
-      ("zorder", s"$base/z", zorder, Map.empty[String, String]),
-      ("bloom", s"$base/b", None, bloomOpts),
-      ("composed", s"$base/zb", zorder, bloomOpts))
-    // two interleaved samples per arm (re-seal into the same root — the
-    // nightly shape) so machine drift can't masquerade as a premium
-    val walls = (1 to 2).map { _ =>
-      arms.map { case (_, root, z, opts) =>
-        val t0 = System.nanoTime()
-        VersionedServing.sealDays(spark, sink, root, Seq(day),
-          targetBytes = target, zorder = z, writeOptions = opts)
-        (System.nanoTime() - t0) / 1e9
-      }
-    }
-    def dirBytes(d: String): Long = {
-      val p = new org.apache.hadoop.fs.Path(d)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .getContentSummary(p).getLength
-    }
-    val best = arms.indices.map(i => walls.map(_(i)).min)
-    arms.zipWithIndex.foreach { case ((label, root, _, _), i) =>
-      val dayDir = s"$root/data/${VersionedServing.GenCol}=2/ts_date=$day"
-      println(f"$label%-9s seal best-of-2 ${best(i)}%6.2f s (${best(i) / best(0)}%.2fx plain)  " +
-        f"${dirBytes(dayDir) / 1048576.0}%7.1f MB")
-    }
-
-    // the layers never change an answer — all four arms hash-identical
-    def sig(root: String) = Layout.servingEvents(spark, root)
-      .agg(count(lit(1)).as("n"),
-        sum(hash(col("event_id"), col("user_id"), col("ts")).cast("long")).as("h")).head
-    val sigs = arms.map { case (_, root, _, _) => sig(root) }
-    require(sigs.distinct.size == 1, s"arms must serve identical data: $sigs")
-    println(s"identity: all four arms serve ${sigs.head.getLong(0)} rows, same content hash")
-
-    // read side, on the SAME composed generation vs the single layers:
-    // (a) the dashboard box — files touched + wall
-    val uMax = spark.read.parquet(sink).agg(max("user_id")).head.getLong(0)
-    val uBox = ("user_id", uMax / 2, uMax / 2 + uMax / 8)
-    val tBox = ("ts", dayT0 + 6L * 3600, dayT0 + 9L * 3600 - 1)
-    def dayDir(root: String) = s"$root/data/${VersionedServing.GenCol}=2/ts_date=$day"
-    for ((label, root, _, _) <- arms) {
-      val (t, n) = Layout.filesTouched(spark, dayDir(root), Seq(uBox, tBox))
-      println(f"box files    $label%-9s touches $t/$n")
-    }
-    // (b) the point lookup — row groups touched for an absent odd id
-    val presentId = spark.read.parquet(dayDir(s"$base/plain"))
-      .stat.approxQuantile("event_id", Array(0.5), 0.0)(0).toLong
-    val absentOdd = presentId + 1L
-    for ((label, root, _, _) <- arms) {
-      val (aT, aN) = Layout.rowGroupsTouched(spark, dayDir(root), "event_id", absentOdd)
-      val (pT, _) = Layout.rowGroupsTouched(spark, dayDir(root), "event_id", presentId)
-      println(f"row groups   $label%-9s absent $aT/$aN, present $pT/$aN")
-    }
-    def med3[T](body: => T): Double = (1 to 3).map { _ =>
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }.sorted.apply(1)
-    for ((label, root, _, _) <- arms) {
-      val box = med3(Layout.servingEvents(spark, root)
-        .filter(col("user_id").between(uBox._2, uBox._3) &&
-          col("ts").between(
-            java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(tBox._2)),
-            java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(tBox._3))))
-        .groupBy("event_type").agg(count(lit(1)), sum("value")).collect())
-      val lkAbs = med3(Layout.servingEvents(spark, root)
-        .filter(col("event_id") === absentOdd).collect())
-      val lkPres = med3(Layout.servingEvents(spark, root)
-        .filter(col("event_id") === presentId).collect())
-      println(f"wall med-3   $label%-9s box $box%6.3f s  absent-id $lkAbs%6.3f s  present-id $lkPres%6.3f s")
-    }
-  }
-
-  /** `events30x` mode: the composed-events-layout crossover measured
-    * instead of argued (the Probe-1b move applied to the third table).
-    * Replicates events fresh to 30× (same construction as the 10×
-    * replica: shifted event_id/user_id strides, so 30× users at 30×
-    * volume over the SAME day span — the production shape: a table's
-    * day count is bounded, its per-day density grows), then runs the
-    * three-arm A/B (raw / date-only / composed-32) over the events
-    * family. The question it settles: date-only's per-file overhead tax
-    * on user-keyed full-scan members (sessionize/funnel/cohort) is a
-    * FIXED cost while the composed arm's removed user_id exchange is
-    * CORPUS-SIZED — where is the crossover? */
-  private def events30xProbe(spark: SparkSession, src: String): Unit = {
-    val out = "/tmp/graft_events30x"
-    val mult = 30
-    if (!new java.io.File(s"$out/events.parquet").exists()) {
-      val base = spark.read.parquet(s"$src/events.parquet")
-      val copies = spark.range(mult).select(col("id").as("copy"))
-      base.crossJoin(copies)
-        .withColumn("event_id", col("event_id") + col("copy") * 10000000L)
-        .withColumn("user_id", col("user_id") + col("copy") * 1000L)
-        .drop("copy")
-        .write.mode("overwrite").parquet(s"$out/events.parquet")
-    }
-    println(s"events 30x at $out: ${spark.read.parquet(s"$out/events.parquet").count()} rows")
-    eventsLayoutProbe(spark, out)
-  }
-
-  /** `layout_corpus` mode: the Layout payoff on the CORPUS tables at
-    * sf0.1 — `documents` bucketed by doc_id (32 buckets), `events`
-    * day-partitioned. Workloads: the dedup family's shared per-doc
-    * stages (shingle-index build, minhash signatures — every near-dup
-    * query's front half), the full n-gram Jaccard pair pipeline, and a
-    * one-day event rollup. Reports wall medians + exchange counts for
-    * raw vs laid-out, and the one-time layout write cost — the
-    * recurring-vs-once arithmetic that justifies the layout at 100 TB
-    * (the per-run exchange the bucket write removes is corpus-sized;
-    * the day filter turns a full scan into one directory). */
-  private def layoutCorpusProbe(spark: SparkSession, src: String): Unit = {
-    import graft.storage.Layout
-    val base = "/tmp/graft_layout_corpus"
-    val docsRaw = spark.read.parquet(s"$src/documents.parquet")
-    val eventsRaw = Tables.events(spark, src).withColumn("event_date", to_date(col("ts")))
-
-    val tw0 = System.nanoTime()
-    Layout.writeBucketed(docsRaw, "probe_docs", s"$base/docs", "doc_id", 32)
-    Layout.writePartitioned(eventsRaw, s"$base/events", Seq("event_date"))
-    val writeSec = (System.nanoTime() - tw0) / 1e9
-
-    val day = lit("2024-01-02").cast("date")
-    def dayRollup(ev: DataFrame): DataFrame = ev
-      .filter(col("event_date") === day)
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n"), sum(graft.ops.Prims.dec2(col("value"))).as("v"))
-
-    try {
-      println(f"${"workload"}%-16s ${"layout"}%-10s ${"med(s)"}%8s ${"exchanges"}%10s")
-      val arms: Seq[(String, String, () => DataFrame)] = Seq(
-        ("shingle_index", "raw", () => graft.ops.Dedup.shingleIndexFromDocs(docsRaw)),
-        ("shingle_index", "bucketed", () => graft.ops.Dedup.shingleIndexFromDocs(Layout.table(spark, "probe_docs"))),
-        ("minhash_sig", "raw", () => graft.ops.Dedup.minhashSig(docsRaw)),
-        ("minhash_sig", "bucketed", () => graft.ops.Dedup.minhashSig(Layout.table(spark, "probe_docs"))),
-        ("ngram_jaccard", "raw", () => graft.ops.Dedup.ngramJaccardPairsFromToks(
-          spark, graft.ops.Prims.tokenized(docsRaw))),
-        ("ngram_jaccard", "bucketed", () => graft.ops.Dedup.ngramJaccardPairsFromToks(
-          spark, graft.ops.Prims.tokenized(Layout.table(spark, "probe_docs")))),
-        ("day_rollup", "raw", () => dayRollup(eventsRaw)),
-        ("day_rollup", "partitioned", () => dayRollup(
-          spark.read.parquet(s"$base/events"))))
-      arms.foreach { case (wl, label, mk) =>
-        val nExch = "(?<!Broadcast)(?<!Reused)Exchange ".r
-          .findAllIn(mk().queryExecution.executedPlan.toString).size
-        mk().count() // warm
-        HarnessUtil.releaseAll(spark, gc = true)
-        val samples = (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          mk().count()
-          val dt = (System.nanoTime() - t0) / 1e9
-          HarnessUtil.releaseAll(spark, gc = true)
-          dt
-        }.sorted
-        println(f"$wl%-16s $label%-10s ${samples(1)}%8.2f $nExch%10d")
-      }
-      // the day filter's real payoff at scale is BYTES NOT READ — wall
-      // at sf0.1 is listing-dominated, so report what the scan SELECTS
-      // (post-partition-pruning bytes, the footer-level decision)
-      def scanBytes(df: DataFrame): Long = {
-        val plan = df.queryExecution.executedPlan match {
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-            a.initialPlan
-          case p => p
-        }
-        plan.collectLeaves().collect {
-          case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-            f.selectedPartitions.totalFileSize
-        }.sum
-      }
-      val rawB = scanBytes(dayRollup(eventsRaw))
-      val prunedB = scanBytes(dayRollup(spark.read.parquet(s"$base/events")))
-      val totalDays = eventsRaw.select("event_date").distinct().count()
-      println(f"day_rollup scan-selected bytes: raw=${rawB / 1e6}%.1f MB " +
-        f"partitioned=${prunedB / 1e6}%.1f MB (1 of $totalDays day directories)")
-      println(f"(one-time layout write: $writeSec%.2f s for both tables)")
-    } finally spark.sql("DROP TABLE IF EXISTS probe_docs")
-  }
-
-  /** `layout_diag` mode: diagnose the BENCH layout-arm regression the
-    * r13 record exposed (layout wall 1.6–1.9× raw on 5 of 7 family
-    * queries at sf0.1, doc_fingerprint shuffle UP 3×). For each family
-    * query runs the raw and bucketed-serving arms side by side and
-    * reports med wall, per-run shuffle bytes, per-run TASK count, and
-    * executed-plan exchange count; dumps both executed plans to
-    * /tmp/graft_layout_diag/ for a line diff. The task count is the
-    * tell for the suspected mechanism: the 32-bucket scan pins 32
-    * single-file tasks on a 5,000-row table where the raw scan is ONE
-    * task, so every downstream partial aggregation runs 32-way with
-    * near-zero combining (shuffle rows ∝ maps × groups). */
-  private def layoutDiagProbe(spark: SparkSession, src: String): Unit = {
-    import graft.storage.Layout
-    val family = Seq("dedup_near_minhash", "ngram_jaccard", "minhash_calibration",
-      "simhash_dedup", "doc_fingerprint", "token_count", "quality_score")
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong()
-    val taskCount = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        taskCount.incrementAndGet()
-        Option(te.taskMetrics)
-          .foreach(m => { shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten); () })
-      }
-    })
-    def drained(): (Long, Long) = {
-      HarnessUtil.drainListeners(spark); (shuffleBytes.get(), taskCount.get())
-    }
-    Layout.bucketedDocuments(spark, src) // build outside all timing
-    val dumpDir = java.nio.file.Paths.get("/tmp/graft_layout_diag")
-    java.nio.file.Files.createDirectories(dumpDir)
-    println(f"${"query"}%-22s ${"arm"}%-7s ${"med(s)"}%7s ${"shufKB"}%8s ${"tasks"}%6s ${"exch"}%5s ${"bucketScan"}%10s")
-    family.filter(SparkEntry.queries.contains).foreach { name =>
-      val fn = SparkEntry.queries(name)
-      Seq("raw" -> false, "layout" -> true).foreach { case (arm, enabled) =>
-        spark.conf.set(Layout.EnabledKey, enabled.toString)
-        try {
-          fn(spark, src).count() // warm
-          HarnessUtil.releaseAll(spark, gc = true)
-          val df = fn(spark, src); df.count() // plan-capture run (adaptive-final)
-          val plan = df.queryExecution.executedPlan.toString
-          java.nio.file.Files.writeString(dumpDir.resolve(s"${name}_$arm.txt"), plan)
-          HarnessUtil.releaseAll(spark, gc = true)
-          val (sb0, tc0) = drained()
-          val samples = (1 to 3).map { _ =>
-            val t0 = System.nanoTime()
-            fn(spark, src).count()
-            val dt = (System.nanoTime() - t0) / 1e9
-            HarnessUtil.releaseAll(spark, gc = true)
-            dt
-          }.sorted
-          val (sb1, tc1) = drained()
-          val nExch = "(?<!Broadcast)(?<!Reused)Exchange ".r.findAllIn(plan).size
-          val bucketed = plan.contains("SelectedBucketsCount")
-          println(f"$name%-22s $arm%-7s ${samples(1)}%7.2f ${(sb1 - sb0) / 3.0 / 1024}%8.1f ${(tc1 - tc0) / 3}%6d $nExch%5d $bucketed%10s")
-        } finally spark.conf.set(Layout.EnabledKey, "false")
-      }
-    }
-  }
-
-  private def aqeSkewProbe(spark: SparkSession, src: String): Unit = {
-    val n = 20000000L
-    val dimN = 2000000L
-    // v is a HASH, not the sequential id: a constant hot key + sequential
-    // payload lz4-compresses ~10x in the shuffle, and AQE's skew detector
-    // reads COMPRESSED map-output sizes — the hostile partition must be
-    // hostile in bytes, not just rows
-    val fact = spark.range(n).select(
-        when(pmod(col("id"), lit(2)) === 0, lit(0L))
-          .otherwise(pmod(col("id"), lit(dimN))).as("k"),
-        xxhash64(col("id")).as("v"))
-      .repartition(32).materialized
-    val dim = spark.range(dimN).select(col("id").as("k"),
-        expr("repeat('x', 64)").as("pad"))
-      .repartition(32).materialized
-    // the aggregate must consume BOTH sides' payloads: summing only the
-    // dim pad lets column pruning strip v from the fact shuffle, whose
-    // hot partition then holds nothing but the constant key — which
-    // compresses below any skew threshold
-    // v is reduced modulo AFTER the join (so the full random long still
-    // rides the shuffle) and bounded before summing — 20M full-range
-    // longs overflow an ANSI sum
-    def join() = fact.join(dim, Seq("k"))
-      .select(sum(pmod(col("v"), lit(1000L)) + length(col("pad"))).as("s"))
-    val saved = Seq("spark.sql.adaptive.enabled",
-      "spark.sql.adaptive.skewJoin.enabled",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes")
-      .map(k => k -> spark.conf.getOption(k)).toMap
-    def arm(label: String, skewOn: Boolean): (Double, String) = {
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", skewOn.toString)
-      // probe-hardware sizing of the production-default 256m / 64m knobs
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "4m")
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "2m")
-      val df = join()
-      df.collect() // warm + finalizes the adaptive plan
-      System.gc()
-      val samples = (1 to 3).map { _ =>
-        val d = join()
-        val t0 = System.nanoTime()
-        d.collect()
-        val dt = (System.nanoTime() - t0) / 1e9
-        System.gc(); dt
-      }.sorted
-      val plan = df.queryExecution.executedPlan.toString
-      println(f"aqeskew $label%-9s med=${samples(1)}%6.2f s " +
-        f"(min=${samples.head}%.2f max=${samples.last}%.2f) " +
-        s"skewNodes=${plan.split('\n').count(_.contains("skew=true"))}")
-      (samples(1), plan)
-    }
-    val (offSec, offPlan) = arm("skew-off", skewOn = false)
-    val (onSec, onPlan) = arm("skew-on", skewOn = true)
-    if (!onPlan.contains("skew=true"))
-      println("aqeskew DEBUG skew-on plan:\n" + onPlan)
-    require(offPlan.contains("SortMergeJoin"),
-      "probe premise broken: the hostile join did not sort-merge (dim side broadcast?)")
-    require(onPlan.contains("skew=true"),
-      "AQE did NOT mark the 50%-hot-key join skewed — threshold sizing is off")
-    require(!offPlan.contains("skew=true"), "skew-off arm unexpectedly split")
-    println(f"aqeskew summary: skew-on $onSec%.2f s vs skew-off $offSec%.2f s " +
-      f"(${offSec / onSec}%.2fx) - AQE split the hot partition (skew=true in plan)")
-    saved.foreach { case (k, v) =>
-      v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-    HarnessUtil.releaseAll(spark, gc = true)
-    // arm 2: the engine's own join shapes, as shipped
-    for (q <- Seq("decontaminate", "dedup_near_minhash")) {
-      val df = SparkEntry.queries(q)(spark, src)
-      df.count()
-      val plan = df.queryExecution.executedPlan.toString
-      def cnt(s: String) = plan.split('\n').count(_.contains(s))
-      println(s"aqeskew engine-shape $q: broadcastHashJoin=${cnt("BroadcastHashJoin")} " +
-        s"sortMergeJoin=${cnt("SortMergeJoin")} skewMarked=${cnt("skew=true")}")
-      HarnessUtil.releaseAll(spark)
-    }
-  }
-
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // overridable so probes (layout_diag in particular) can run against
-    // a 10x replica dir instead of the canonical sf0.1
-    val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    if (args.headOption.contains("density")) {
-      val qs = if (args.length > 1) args.drop(1).toSeq
-        else Seq("dedup_near_minhash", "ngram_jaccard")
-      densityProbe(spark, src, qs)
-      spark.stop(); return
-    }
-    if (args.headOption.contains("grouprank")) {
-      groupRankProbe(spark)
-      spark.stop(); return
-    }
-    if (args.headOption.contains("fresh10x")) {
-      val qs = if (args.length > 1) args.drop(1).toSeq
-        else Seq("ngram_jaccard", "minhash_calibration", "cluster_size_histogram",
-          "split_leakage", "train_val_split_cluster", "source_overlap")
-      fresh10xProbe(spark, src, qs)
-      spark.stop(); return
-    }
-    if (args.headOption.contains("fresh100x")) {
-      // the 100× leg: one pair-family member at 100× fresh-text volume —
-      // direct evidence for the posture's own scale claim (the r15
-      // verdict's stretch ask; disk is ~60 MB, well inside budget)
-      val qs = if (args.length > 1) args.drop(1).toSeq else Seq("dedup_near_minhash")
-      fresh10xProbe(spark, src, qs, mult = 100)
-      spark.stop(); return
-    }
-    if (args.headOption.contains("fresh30x")) {
-      // the ≥30× leg of the constant-density scaling evidence
-      // (docs/SCALING.md): same salted-copy construction at 30× volume,
-      // reduced member set — the sub-linear claim's load-bearing run
-      val qs = if (args.length > 1) args.drop(1).toSeq
-        else Seq("dedup_near_minhash", "minhash_calibration", "winnow_pairs")
-      fresh10xProbe(spark, src, qs, mult = 30)
-      spark.stop(); return
-    }
-    if (args.headOption.contains("materialize")) {
-      val qs = if (args.length > 1) args.drop(1).toSeq
-        else Seq("dedup_clusters", "corpus_shuffle", "bpe_merges", "pagerank_docs")
-      materializeProbe(spark, src, qs)
-      spark.stop(); return
-    }
-    if (args.headOption.contains("ivftrain")) {
-      ivfTrainProbe(spark, src, "/tmp/graft_sf1_synth") // requires a prior 10x replication run
-      spark.stop(); return
-    }
-    if (args.headOption.contains("semantic")) {
-      semanticProbe(spark, src, "/tmp/graft_sf1_synth") // requires a prior 10x replication run
-      spark.stop(); return
-    }
-    if (args.headOption.contains("chain")) {
-      chainProbe(spark)
-      spark.stop(); return
-    }
-    if (args.headOption.contains("artifact")) {
-      artifactProbe(spark, src)
-      spark.stop(); return
-    }
-    if (args.headOption.contains("simwidth")) {
-      simWidthProbe(spark, src, "/tmp/graft_sf1_synth") // requires a prior 10x replication run
-      spark.stop(); return
-    }
-    if (args.headOption.contains("stargate")) {
-      starGateProbe(spark)
-      spark.stop(); return
-    }
-    if (args.headOption.contains("skew")) {
-      skewProbe(spark)
-      spark.stop(); return
-    }
-    if (args.headOption.contains("aqeskew")) {
-      aqeSkewProbe(spark, src)
-      spark.stop(); return
-    }
-    if (args.headOption.contains("layout")) {
-      layoutProbe(spark, src)
-      spark.stop(); return
-    }
-    if (args.headOption.contains("custkey")) {
-      custkeyProbe(spark, src, "/tmp/graft_sf1_synth") // requires a prior 10x replication run
-      spark.stop(); return
-    }
-    if (args.headOption.contains("eventslayout")) {
-      eventsLayoutProbe(spark, "/tmp/graft_sf1_synth") // requires a prior 10x replication run
-      spark.stop(); return
-    }
-    if (args.headOption.contains("sealcost")) {
-      sealCostProbe(spark, "/tmp/graft_sf1_synth") // requires a prior 10x replication run
-      spark.stop(); return
-    }
-    if (args.headOption.contains("sealversioned")) {
-      sealVersionedProbe(spark, "/tmp/graft_sf1_synth") // requires a prior 10x replication run
-      spark.stop(); return
-    }
-    if (args.headOption.contains("zserve")) {
-      zServeProbe(spark, src, args.drop(1).headOption.map(_.toInt).getOrElse(10))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("bloomserve")) {
-      bloomServeProbe(spark, src, args.drop(1).headOption.map(_.toInt).getOrElse(10))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("composedserve")) {
-      composedServeProbe(spark, src, args.drop(1).headOption.map(_.toInt).getOrElse(100))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("touchseal")) {
-      touchSealProbe(spark, src)
-      spark.stop(); return
-    }
-    if (args.headOption.contains("sketchreuse")) {
-      sketchReuseProbe(spark, src)
-      spark.stop(); return
-    }
-    if (args.headOption.contains("docserve")) {
-      docServeProbe(spark, src)
-      spark.stop(); return
-    }
-    if (args.headOption.contains("events30x")) {
-      events30xProbe(spark, src)
-      spark.stop(); return
-    }
-    if (args.headOption.contains("layout_corpus")) {
-      layoutCorpusProbe(spark, src)
-      spark.stop(); return
-    }
-    if (args.headOption.contains("layout_diag")) {
-      layoutDiagProbe(spark, src)
-      spark.stop(); return
-    }
-    val out = "/tmp/graft_sf1_synth"
-    val mult = 10
-
-    def replicate(name: String, idCols: Map[String, Long]): Unit = {
-      val base = spark.read.parquet(s"$src/$name.parquet")
-      val copies = spark.range(mult).select(col("id").as("copy"))
-      var df = base.crossJoin(copies)
-      idCols.foreach { case (c, stride) =>
-        df = df.withColumn(c, col(c) + col("copy") * stride)
-      }
-      df.drop("copy").write.mode("overwrite").parquet(s"$out/$name.parquet")
-    }
-    // shift keys so cardinalities scale with volume (10x users, docs, orders)
-    val skipGen = new java.io.File(s"$out/region.parquet").exists() // region is written LAST: a partial earlier run regenerates
-    if (!skipGen) {
-    replicate("events", Map("event_id" -> 10000000L, "user_id" -> 1000L))
-    replicate("documents", Map("doc_id" -> 1000000L))
-    replicate("embeddings", Map("vec_id" -> 1000000L))
-    replicate("lineitem", Map("l_orderkey" -> 10000000L))
-    replicate("orders", Map("o_orderkey" -> 10000000L, "o_custkey" -> 1000000L))
+  /** Write `mult` copies of every table in `src` into `out`. Each copy
+    * shifts the keys by a per-table stride so cardinalities grow with
+    * volume (mult× users, docs, orders); the dimension tables are
+    * copied once. A document keeps its text verbatim in copy 0 and in
+    * every copy when `pmod(doc_id, 8) < verbatimEighths`; otherwise each
+    * token is salted with the copy index, so the copy collides with
+    * nothing. The share fixes the near-dup density:
+    *
+    *  - 8: verbatim replica — every duplicate family grows mult-fold,
+    *    so pair counts grow ~quadratically (docs/SCALING.md);
+    *  - 0: fresh text — density held constant while volume grows, the
+    *    pair family's linearity check (docs/SCALING.md, Probe 1);
+    *  - 1, 2, 4: a doc_id-hash share of documents forms mult-sized dup
+    *    groups at constant volume — wall time must follow pair count,
+    *    not volume² (docs/SCALING.md, Probe 2). */
+  def gen(spark: SparkSession, src: String, out: String, mult: Int,
+      verbatimEighths: Int): Unit = {
+    require(mult >= 1, s"mult must be >= 1: $mult")
+    require(verbatimEighths >= 0 && verbatimEighths <= 8,
+      s"verbatimEighths must be in 0..8: $verbatimEighths")
+    val copies = spark.range(mult).select(col("id").as("copy"))
+    def replicate(name: String, keys: Seq[(String, Long)],
+        salt: DataFrame => DataFrame = identity): Unit = {
+      val copied = salt(spark.read.parquet(s"$src/$name.parquet").crossJoin(copies))
+      keys.foldLeft(copied) { case (df, (c, stride)) =>
+        df.withColumn(c, col(c) + col("copy") * stride)
+      }.drop("copy").write.mode("overwrite").parquet(s"$out/$name.parquet")
+    }
+    replicate("events", Seq("event_id" -> 10000000L, "user_id" -> 1000L))
+    // salted before the doc_id shift: the verbatim share is a hash of
+    // the SOURCE doc_id, so every copy of a document decides alike
+    replicate("documents", Seq("doc_id" -> 1000000L), _.withColumn("text",
+      when(col("copy") === 0 || pmod(col("doc_id"), lit(8)) < verbatimEighths, col("text"))
+        .otherwise(concat_ws(" ",
+          expr("transform(split(text, ' '), w -> concat(w, '_', copy))")))))
+    replicate("embeddings", Seq("vec_id" -> 1000000L))
+    replicate("lineitem", Seq("l_orderkey" -> 10000000L))
+    replicate("orders", Seq("o_orderkey" -> 10000000L, "o_custkey" -> 1000000L))
     for (t <- Seq("customer", "supplier", "part", "nation", "region"))
       spark.read.parquet(s"$src/$t.parquet").write.mode("overwrite").parquet(s"$out/$t.parquet")
-    }
-    println("replicated 10x into " + out)
+  }
 
-    val probeQueries = if (args.nonEmpty) args.toSeq
-      else Seq("group_agg", "rolling_sum", "session_window",
-        "sliding_window", "word_count", "enrich_wide_row", "ann_topk",
-        "simhash_dedup", "doc_fingerprint", "dedup_exact", "last_nonnull_merge")
-    def timeAll(dir: String): Map[String, Double] = probeQueries.map { n =>
+  private def time(spark: SparkSession, dirs: Seq[String], queries: Seq[String]): Unit = {
+    val timer = new HarnessUtil.QueryTimer(spark)
+    println(f"${"query"}%-24s ${"dir"}%-32s ${"sec"}%8s ${"shufMB"}%9s ${"x_sec"}%7s ${"x_shuf"}%7s")
+    queries.foreach { n =>
       val fn = SparkEntry.queries(n)
-      fn(spark, dir).count() // warm
-      HarnessUtil.releaseAll(spark)
-      val t0 = System.nanoTime()
-      fn(spark, dir).count()
-      HarnessUtil.releaseAll(spark)
-      n -> (System.nanoTime() - t0) / 1e9
-    }.toMap
-    val base = timeAll(src)
-    val big = timeAll(out)
-    println(f"${"query"}%-20s ${"sf0.1"}%8s ${"10x"}%8s ${"ratio"}%6s")
-    probeQueries.foreach { n =>
-      println(f"$n%-20s ${base(n)}%8.2f ${big(n)}%8.2f ${big(n) / base(n)}%6.1f")
+      val rows = dirs.map { d =>
+        val (samples, shuffle) = timer.time(fn, d)
+        (d, samples(samples.length / 2), shuffle)
+      }
+      val (_, sec0, bytes0) = rows.head
+      rows.foreach { case (d, sec, bytes) =>
+        val xShuf = if (bytes0 > 0) bytes.toDouble / bytes0 else Double.NaN
+        println(f"$n%-24s $d%-32s $sec%8.2f ${bytes / 1024.0 / 1024.0}%9.2f ${sec / sec0}%7.2f $xShuf%7.2f")
+      }
     }
-    spark.stop()
+  }
+
+  private def withSession(body: SparkSession => Unit): Unit = {
+    val spark = GraftSession()
+    try body(spark) finally spark.stop()
+  }
+
+  def main(args: Array[String]): Unit = args.toSeq match {
+    case Seq("gen", out, mult, eighths) if sys.env.contains("SPARK_GRAFT_SF_DIR") =>
+      val src = sys.env("SPARK_GRAFT_SF_DIR")
+      withSession(gen(_, src, out, mult.toInt, eighths.toInt))
+      println(s"generated ${mult}x of $src into $out (verbatim $eighths/8)")
+    case "time" +: rest if rest.indexOf("--") > 0 && rest.last != "--" =>
+      val (dirs, names) = (rest.takeWhile(_ != "--"), rest.dropWhile(_ != "--").drop(1))
+      names.foreach(n => require(SparkEntry.queries.contains(n), s"unknown query: $n"))
+      withSession(time(_, dirs, names))
+    case "plan" +: dir +: names =>
+      withSession { spark =>
+        (if (names.nonEmpty) names else PlanQueries).foreach { n =>
+          println(s"\n========== $n ==========")
+          SparkEntry.queries(n)(spark, dir).explain("formatted")
+        }
+      }
+    case _ =>
+      System.err.println(
+        """usage: SPARK_GRAFT_SF_DIR=<srcDir> ScaleProbe gen <outDir> <mult> <verbatimEighths>
+          |       ScaleProbe time <dir>... -- <query>...
+          |       ScaleProbe plan <dir> [query...]""".stripMargin)
+      sys.exit(2)
   }
 }

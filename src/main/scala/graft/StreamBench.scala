@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** Streaming throughput bench: drive representative stateful operators
@@ -16,7 +15,11 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
   * (first batch warms codegen + state stores).
   *
   * Usage: `sbt "runMain graft.StreamBench [totalRows]"` → one JSON line
-  * `{"metric":"stream_rows_per_sec","ops":{...}}`.
+  * `{"metric":"stream_rows_per_sec","ops":{...}}`. For the RocksDB
+  * store, set
+  * {{{
+  * SPARK_GRAFT_CONF="spark.sql.streaming.stateStore.providerClass=org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider;spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled=true"
+  * }}}
   */
 object StreamBench {
   private val ChunkRows = 20000
@@ -26,26 +29,12 @@ object StreamBench {
     require(total > ChunkRows,
       s"totalRows must exceed the $ChunkRows-row warm-up batch " +
         "(the measured window excludes it; nothing would be timed)")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // SPARK_GRAFT_STATE_STORE=rocksdb benches the at-scale store posture
-    // (RocksDB + changelog checkpointing) against the default heap
-    // provider; RocksDbStateStoreSpec pins output equivalence, this
-    // pins the throughput cost (docs/STREAMBENCH_r13.md).
-    val stateStore = sys.env.getOrElse("SPARK_GRAFT_STATE_STORE", "heap")
-    if (stateStore == "rocksdb") {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-    }
+    val spark = GraftSession()
+    // the RocksDB arm (docs/STREAMBENCH_r13.md) is set through
+    // SPARK_GRAFT_CONF; the record names the provider it ran on
+    val stateStore =
+      if (spark.conf.get("spark.sql.streaming.stateStore.providerClass").contains("RocksDB"))
+        "rocksdb" else "heap"
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 

@@ -1,38 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (tools/oracle_check.py).
+  *
+  * Usage: `runMain graft.Verify <sfDir> <outDir> [query...]` — optional
+  * trailing names restrict the dump AND the oracle map to those queries
+  * (local iteration on one query); the two-arg invocation dumps
+  * everything. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    // optional trailing names restrict the dump (local iteration on a
-    // new query); the driver's two-arg invocation dumps everything
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", (64 * 1024).toString)) // scan-split floor - see Bench
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_MATERIALIZE_MODE=reliable runs the WHOLE surface with
-    // every eager pin going through checkpoint-to-storage instead of
-    // localCheckpoint — the full-surface proof that materialize mode
-    // never changes results (MaterializeSpec pins 3 queries; this is
-    // the other ~45 pin sites). The checkpoint dir stands in for the
-    // cluster's fault-tolerant path.
-    sys.env.get("SPARK_GRAFT_MATERIALIZE_MODE").foreach { mode =>
-      spark.conf.set(graft.ops.Prims.MaterializeModeKey, mode)
-      if (mode == "reliable")
-        spark.sparkContext.setCheckpointDir(
-          sys.env.getOrElse("SPARK_GRAFT_CHECKPOINT_DIR", "/tmp/graft_reliable_ckpt"))
-    }
-    HarnessUtil.applyEnvConf(spark)
+    val unknown = only.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     // Record every declared query's outcome so the snapshot is self-describing:
     // a failing query lands in verify_errors.json with its message instead of
@@ -53,7 +34,9 @@ object Verify {
     def q(s: String): String = HarnessUtil.jsonQ(s)
     Files.writeString(Paths.get(s"$outDir/verify_errors.json"),
       errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
-    val json = SparkEntry.oracleSql
+    // a subset dump gets a subset oracle map, so oracle_check.py checks
+    // exactly the dumped queries instead of failing the other ~148
+    val json = SparkEntry.oracleSql.view.filterKeys(k => only.isEmpty || only(k))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -5,12 +5,9 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** SparkSessionExtensions hook registering graft's native functions so
-  * they are usable from SQL text as well as the Column API:
-  *
-  *   SparkSession.builder()
-  *     .withExtensions(new GraftExtensions)        // or
-  *     .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-  *
+  * they are usable from SQL text as well as the Column API. Sessions
+  * from [[graft.GraftSession]] carry it; any other session takes it as
+  * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`,
   * then `SELECT qdot(a.qv, b.qv) FROM ...`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

@@ -339,31 +339,20 @@ object Dedup {
   }
 
   /** (doc_id, simhash) — the fingerprint core shared by [[simhashDedup]]
-    * and [[simhashHammingPairs]], at the fixture width. */
-  private def simhashFps(s: SparkSession, dir: String): DataFrame =
-    simhashFpsImpl(s, dir, SimBits)
-
-  /** [[simhashFps]] at an arbitrary fingerprint WIDTH — the
-    * parameterized core behind the fixture-width query (16-bit,
+    * and [[simhashHammingPairs]], at the fixture width [[SimBits]],
     * oracle-mirrored bit-for-bit: on non-negative hashes the logical
-    * shift and bitwise-OR below equal the oracle's arithmetic shift
-    * and sum of distinct powers) and the production-width probe
-    * (`ScaleProbe simwidth`: 64-bit fingerprints, Manku et al.'s
-    * configuration). The 64-bit token hash is xxhash64 — full-range,
-    * sign bit included; every bit extraction is logical-shift + mask,
-    * so a negative hash is just a 64-bit pattern, never an arithmetic
-    * value. */
-  private[graft] def simhashFpsImpl(s: SparkSession, dir: String,
-                                    bits: Int): DataFrame = {
-    require(bits == SimBits || bits == 64, s"unsupported simhash width: $bits")
-    val tokHash = if (bits == SimBits) pmod(hash60(col("w")), lit(1L << SimBits))
-                  else xxhash64(col("w"))
+    * shift and bitwise-OR below equal the oracle's arithmetic shift and
+    * sum of distinct powers. The production width (64-bit fingerprints,
+    * Manku et al.'s configuration) was probed on the 10× replica:
+    * docs/SCALEPROBE_r10.md §3; that probe's 64-bit arm is in commit
+    * 5af66b2. */
+  private def simhashFps(s: SparkSession, dir: String): DataFrame = {
     val toks = Tables.documents(s, dir)
       .select(col("doc_id"), explode(expr(wordsExpr)).as("w"))
-      .select(col("doc_id"), tokHash.as("h"))
-    val bitSums = (0 until bits).map(b =>
+      .select(col("doc_id"), pmod(hash60(col("w")), lit(1L << SimBits)).as("h"))
+    val bitSums = (0 until SimBits).map(b =>
       sum(shiftrightunsigned(col("h"), b) % 2 * 2 - 1).as(s"s$b"))
-    val fp = (0 until bits).map(b =>
+    val fp = (0 until SimBits).map(b =>
       when(col(s"s$b") >= 0, lit(1L << b)).otherwise(lit(0L)))
       .reduce(_ bitwiseOR _)
     toks.groupBy("doc_id").agg(bitSums.head, bitSums.tail: _*)
@@ -392,18 +381,11 @@ object Dedup {
     * only 4 bits, so buckets are corpus-fraction-sized and the cap
     * does the heavy lifting; a production deployment uses a 64-bit
     * fingerprint with 16-bit bands (the paper's configuration), where
-    * buckets are genuinely sparse — [[simhashHammingPairsImpl]] takes
-    * the widths as parameters and `ScaleProbe simwidth` probes the
-    * 64/16 configuration on the 10× replica. */
+    * buckets are genuinely sparse — [[hammingPairs]] takes the widths
+    * as parameters, and the 64/16 configuration on the 10× replica is
+    * recorded in docs/SCALEPROBE_r10.md §3. */
   def simhashHammingPairs(s: SparkSession, dir: String): DataFrame =
-    simhashHammingPairsImpl(s, dir, SimBits, SimHammingK)
-
-  /** [[simhashHammingPairs]] at arbitrary (fingerprint width, max
-    * Hamming distance): bands = hammingK+1 equal slices of the
-    * fingerprint (pigeonhole), identical machinery at every width. */
-  private[graft] def simhashHammingPairsImpl(s: SparkSession, dir: String,
-                                             bits: Int, hammingK: Int): DataFrame =
-    hammingPairs(simhashFpsImpl(s, dir, bits), "simhash", bits, hammingK)
+    hammingPairs(simhashFps(s, dir), "simhash", SimBits, SimHammingK)
 
   /** The banded Hamming-pair core over ANY (doc_id, fingerprint) frame
     * — pigeonhole banding, [[MaxBandBucket]] hub-star cap, exact
@@ -852,8 +834,9 @@ object Dedup {
     * cap, which a chain-shaped component of depth 21 could legitimately
     * blow, this guard is unreachable for real data and exists solely so
     * a logic regression fails loudly instead of looping forever. The
-    * chain probe (`ScaleProbe chain`) pins the log bound empirically:
-    * round count grows by ~1 per chain-length DOUBLING. */
+    * chain probe pinned the log bound empirically: round count grows
+    * by ~1 per chain-length DOUBLING (docs/SCALEPROBE_r10.md §1; probe
+    * code in commit 5af66b2). */
   private[graft] val StarMaxRounds = 64
 
   /** Large-graph path: two-phase alternating-star connected components
@@ -1009,8 +992,9 @@ object Dedup {
     * artifact is cheap to store and every reader is a metadata-sized
     * scan or corpus-scan + one join. The self-contained query forms
     * remain the oracle surface; PairGraphArtifactSpec proves each
-    * reader bit-identical to its self-contained twin, and `ScaleProbe
-    * artifact` measures the saved recompute. */
+    * reader bit-identical to its self-contained twin; the saved
+    * recompute is measured in docs/SCALEPROBE_r10.md §2 (probe code in
+    * commit 5af66b2). */
   def pairGraph(s: SparkSession, dir: String, outPath: String): Unit = {
     val pairs = ngramJaccardPairs(s, dir).materialized
     pairs.write.mode("overwrite").parquet(s"$outPath/pairs.parquet")

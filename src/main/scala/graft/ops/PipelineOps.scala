@@ -875,9 +875,11 @@ object PipelineOps {
   def curateManifest(s: SparkSession, dir: String): DataFrame =
     curateStages(s, dir).manifest
 
-  /** The successive stage frames of [[curateManifest]] — exposed so the
-    * stage-timing recorder (`graft.CurateStages`) can wall-clock each
-    * stage boundary without duplicating the pipeline's definition. */
+  /** The successive stage frames of [[curateManifest]] — exposed so
+    * Bench's `curate_stages` record can wall-clock each stage boundary
+    * without duplicating the pipeline's definition (the standalone
+    * recorder behind docs/CURATE_STAGES_r9.md and r11 is in commit
+    * 5af66b2). */
   private[graft] case class CurateStageFrames(
       dd: DataFrame, collapsed: DataFrame, clean: DataFrame,
       picked: DataFrame, manifest: DataFrame)

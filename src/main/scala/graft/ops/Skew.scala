@@ -4,9 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Manual skew mitigation — the library API behind the patterns the
-  * scale probes measure (`ScaleProbe skew`: two-phase salted
-  * aggregation beats a direct hot-key groupBy ~2× at 100M rows;
-  * `ScaleProbe aqeskew`: AQE splits skewed SMJ partitions at runtime).
+  * scale probes measured: two-phase salted aggregation beats a direct
+  * hot-key groupBy ~2× at 100M rows (docs/SCALEPROBE_r9.md §2), and AQE
+  * splits skewed SMJ partitions at runtime (docs/SCALEPROBE_r10.md §4).
+  * Both probes' code is in commit 5af66b2.
   *
   * AQE's skew-join handling covers the JOIN case when it can see the
   * skew at runtime; these helpers are for the cases it does not own:

@@ -363,8 +363,9 @@ object Layout {
     * HashPartitioning on the bucket column), at the cost of
     * dirs × buckets files — which is why it is an explicit per-
     * deployment choice rather than the default: at fixture scale the
-    * fragmentation costs more than the exchange (ScaleProbe
-    * `eventslayout` records the crossover), at warehouse scale both
+    * fragmentation costs more than the exchange (the crossover is in
+    * docs/SCALEPROBE_r15.md §2b and docs/SCALEPROBE_r16.md §2; probe
+    * code in commit 5af66b2), at warehouse scale both
     * terms grow but the removed exchange is corpus-sized while the
     * file count stays days × buckets. */
   val EventsBucketsKey = "spark.graft.layout.events.buckets"

@@ -110,17 +110,10 @@ object NightlyCloseout {
       case a if a.startsWith("targetBytes=") =>
         a.stripPrefix("targetBytes=").toLong
     }.getOrElse(128L * 1024 * 1024)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.GraftSession.envCpus
+    val spark = graft.GraftSession(cpus)
     val s = run(spark, sink, root, keepFrom, zorder, bloom,
-      parallelism = cpus.toInt, vacuum = vacuum, targetBytes = targetBytes)
+      parallelism = cpus, vacuum = vacuum, targetBytes = targetBytes)
     println(s"close-out: sealed ${s.sealedDays.size} days " +
       s"(${s.sealedDays.mkString(", ")}), ${s.rowsSealed} rows, " +
       s"bookmark ${s.sealedThrough.getOrElse("-")}; " +

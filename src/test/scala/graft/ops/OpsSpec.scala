@@ -113,6 +113,10 @@ class OpsSpec extends SparkSpec {
     assert(e.filter(nullable).count() == 0)
   }
 
+  test("SparkEntry.entry: the flagship enrich join returns rows") {
+    assert(graft.SparkEntry.entry(spark).count() > 0)
+  }
+
   test("dedup_near_minhash candidates cover all high-jaccard pairs (LSH recall)") {
     val s = spark
     import s.implicits._
@@ -677,5 +681,42 @@ class OpsSpec extends SparkSpec {
       val ham = java.lang.Long.bitCount(fp(a) ^ fp(b))
       assert(ham <= 5, s"docs $a,$b jaccard>=0.95 but hamming $ham")
     }
+  }
+
+  // ScaleProbe.gen at mult 3: the verbatim share sets which documents
+  // keep their text in copies 1..mult-1; every copy gets its own doc_ids
+  private val GenMult = 3
+
+  private def generatedDocs(verbatimEighths: Int): org.apache.spark.sql.DataFrame = {
+    val out = java.nio.file.Files.createTempDirectory(s"gen_$verbatimEighths").toString
+    graft.ScaleProbe.gen(spark, dir, out, GenMult, verbatimEighths)
+    val docs = spark.read.parquet(s"$out/documents.parquet")
+    val n = spark.read.parquet(s"$dir/documents.parquet").count()
+    assert(docs.count() == GenMult * n)
+    assert(docs.select("doc_id").distinct().count() == GenMult * n)
+    docs
+  }
+
+  private def sameRows(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
+    a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+
+  test("ScaleProbe.gen share 8: mult verbatim copies with shifted doc_ids") {
+    import org.apache.spark.sql.functions._
+    val source = spark.read.parquet(s"$dir/documents.parquet")
+    val expected = source.crossJoin(spark.range(GenMult).select(col("id").as("copy")))
+      .withColumn("doc_id", col("doc_id") + col("copy") * 1000000L).drop("copy")
+    assert(sameRows(generatedDocs(8), expected))
+  }
+
+  test("ScaleProbe.gen share 0: copy 0 is the source, later copies share no token with it") {
+    import org.apache.spark.sql.functions._
+    val source = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = generatedDocs(0)
+    assert(sameRows(docs.filter(col("doc_id") < 1000000L), source))
+    def tokens(df: org.apache.spark.sql.DataFrame) =
+      df.select(explode(split(col("text"), " ")).as("w")).distinct()
+    val later = docs.filter(col("doc_id") >= 1000000L)
+    assert(later.count() == (GenMult - 1) * source.count())
+    assert(tokens(later).intersect(tokens(source)).isEmpty)
   }
 }

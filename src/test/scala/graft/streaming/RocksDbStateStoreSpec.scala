@@ -14,7 +14,8 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
   * machines are provider-agnostic: identical output under RocksDB (vs
   * the heap runs every other spec pins), and kill-restart recovery from
   * a RocksDB + changelog checkpoint. Throughput comparison lives in
-  * docs/STREAMBENCH_r13.md (StreamBench SPARK_GRAFT_STATE_STORE=rocksdb).
+  * docs/STREAMBENCH_r13.md (StreamBench with this suite's two confs
+  * set through SPARK_GRAFT_CONF).
   */
 class RocksDbStateStoreSpec extends SparkSpec {
 
